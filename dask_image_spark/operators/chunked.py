@@ -7,7 +7,11 @@ therefore not economical as joins:
   (``dask_image/ndinterp/__init__.py::spline_filter1d``): parallelises
   perfectly across the *other* axis — each grid line is one group.
 * Fourier-domain ops (``dask_image/ndfourier``): FFT needs the whole image;
-  each image is one group, images parallelise across the cluster.
+  each image is one group, images parallelise across the cluster. One
+  whole-image apply serves every rank (coordinates from ``len(shape)``,
+  n-D FFT), so ``fourier_gaussian`` takes volumes as well as planes.
+* ``map_overlap_tiles`` — dask's ``map_overlap`` for 2-D tiles, padded by
+  the same boundary template as the R1 stencils.
 
 Data moves as Arrow batches; the pandas function sees one group at a time,
 so executor memory bounds the *image* size, not the dataset size — the same
@@ -24,6 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from dask_image_spark.caching import persist_tracked
+from dask_image_spark.operators.ndfilters import axis_names, padded_pixels
 
 _CUBIC_POLE = math.sqrt(3.0) - 2.0
 
@@ -47,17 +52,13 @@ SPLINE_POLES: dict[int, list[float]] = {
 }
 
 
-def spline_filter1d_np(
-    line: np.ndarray, pole: float | None = None, order: int = 3
-) -> np.ndarray:
+def spline_filter1d_np(line: np.ndarray, order: int = 3) -> np.ndarray:
     """B-spline prefilter of ``order`` along a 1-D line (Unser's algorithm,
     mirror-symmetric boundary): one forward/backward first-order IIR pass
     per pole, cascaded. Implemented from the published recurrences (no scipy
-    in this container). ``pole`` overrides the order's pole family with a
-    single explicit pole (back-compat with the cubic-only form)."""
-    poles = [pole] if pole is not None else SPLINE_POLES[order]
+    in this container)."""
     out = line.astype(np.float64)
-    for p in poles:
+    for p in SPLINE_POLES[order]:
         out = _spline_pole_pass(out, p)
     return out
 
@@ -136,38 +137,34 @@ def spline_filter1d(
 
 
 def _image_apply(px: DataFrame, np_fn, shape, keys=()) -> DataFrame:
-    """Apply ``np_fn(2d array) -> 2d array`` to each whole image group."""
+    """Apply ``np_fn(nd array) -> nd array`` to each whole image group. The
+    rank is ``len(shape)``; the coordinate columns are ``axis_names`` of it.
+    Without keys the whole table is one image (a constant group key)."""
     keys = list(keys)
-    h, w = shape
+    coords = axis_names(len(shape))
     schema = ", ".join(
-        [*(f"{k} long" for k in keys), "y int", "x int", "v double"]
+        [*(f"{k} long" for k in keys), *(f"{c} int" for c in coords), "v double"]
     )
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        img = np.zeros((h, w), dtype=np.float64)
-        img[pdf["y"].to_numpy(), pdf["x"].to_numpy()] = pdf["value"].to_numpy()
+        img = np.zeros(shape, dtype=np.float64)
+        img[tuple(pdf[c].to_numpy() for c in coords)] = pdf["value"].to_numpy()
         out = np_fn(img)
-        ys, xs = np.indices((h, w))
         res = pd.DataFrame(
-            {"y": ys.ravel(), "x": xs.ravel(), "v": out.ravel()}
+            {c: idx.ravel() for c, idx in zip(coords, np.indices(shape))}
         )
+        res["v"] = out.ravel()
         for k in keys:
             res[k] = pdf[k].iloc[0]
-        return res[[*keys, "y", "x", "v"]]
+        return res[[*keys, *coords, "v"]]
 
     grouped = px.groupBy(*keys) if keys else px.groupBy(F.lit(1).alias("_g"))
-    if not keys:
-        schema = "y int, x int, v double"
-
-        def fn_nokey(pdf: pd.DataFrame) -> pd.DataFrame:
-            img = np.zeros((h, w), dtype=np.float64)
-            img[pdf["y"].to_numpy(), pdf["x"].to_numpy()] = pdf["value"].to_numpy()
-            out = np_fn(img)
-            ys, xs = np.indices((h, w))
-            return pd.DataFrame({"y": ys.ravel(), "x": xs.ravel(), "v": out.ravel()})
-
-        return grouped.applyInPandas(fn_nokey, schema)
     return grouped.applyInPandas(fn, schema)
+
+
+def _fft_filter(img: np.ndarray, resp: np.ndarray) -> np.ndarray:
+    """Multiply the image's n-D spectrum by ``resp``; real inverse."""
+    return np.real(np.fft.ifftn(np.fft.fftn(img) * resp))
 
 
 def map_overlap_tiles(
@@ -196,13 +193,13 @@ def map_overlap_tiles(
     per-pixel relational form (large kernels, chained scipy-style ops).
     ``tile_fn(tile: np.ndarray) -> np.ndarray`` must be shape-preserving.
     """
-    from dask_image_spark.operators.ndfilters import padded_pixels
-
     h, w = shape
     keys = list(keys)
     if depth >= block:
         raise ValueError(f"depth {depth} must be < block {block}")
-    pad = padded_pixels(px, depth, shape, mode, cval, keys)  # keys,y,x,_pv
+    pad = padded_pixels(
+        px, (depth, depth), shape, mode, cval, ("y", "x"), keys
+    )  # keys,y,x,_pv
     side = block + 2 * depth
     # Tile assignment: pixel (y, x) belongs to exactly the tiles whose
     # padded window [t*block - depth, (t+1)*block + depth) contains it per
@@ -263,16 +260,19 @@ def map_overlap_tiles(
 
 
 def fourier_gaussian(px: DataFrame, sigma: float, shape, keys=()) -> DataFrame:
-    """Gaussian in the frequency domain
+    """Gaussian in the frequency domain at any rank
     (``ndfourier/__init__.py::fourier_gaussian``): FFT, multiply by
-    exp(-2 pi^2 sigma^2 f^2) per axis, inverse FFT (real part).
-    Equivalent to spatial gaussian_filter with periodic (wrap) boundary."""
+    exp(-2 pi^2 sigma^2 |f|^2), inverse FFT (real part). Equivalent to
+    spatial gaussian_filter with periodic (wrap) boundary."""
 
     def fn(img: np.ndarray) -> np.ndarray:
-        fy = np.fft.fftfreq(img.shape[0])[:, None]
-        fx = np.fft.fftfreq(img.shape[1])[None, :]
-        resp = np.exp(-2.0 * np.pi**2 * sigma**2 * (fy**2 + fx**2))
-        return np.real(np.fft.ifft2(np.fft.fft2(img) * resp))
+        f2 = 0.0
+        for axis, n in enumerate(img.shape):
+            f = np.fft.fftfreq(n).reshape(
+                [-1 if a == axis else 1 for a in range(img.ndim)]
+            )
+            f2 = f2 + f**2  # summed in axis order: fy**2 + fx**2 at rank 2
+        return _fft_filter(img, np.exp(-2.0 * np.pi**2 * sigma**2 * f2))
 
     return _image_apply(px, fn, shape, keys)
 
@@ -286,7 +286,7 @@ def fourier_uniform(px: DataFrame, size: int, shape, keys=()) -> DataFrame:
         with np.errstate(invalid="ignore"):
             ry = np.sinc(fy * size)
             rx = np.sinc(fx * size)
-        return np.real(np.fft.ifft2(np.fft.fft2(img) * ry * rx))
+        return _fft_filter(img, ry * rx)
 
     return _image_apply(px, fn, shape, keys)
 
@@ -351,8 +351,7 @@ def fourier_ellipsoid(px: DataFrame, size, shape, keys=()) -> DataFrame:
     so unlike gaussian/uniform the response couples the axes."""
 
     def fn(img: np.ndarray) -> np.ndarray:
-        resp = ellipsoid_response(img.shape, size)
-        return np.real(np.fft.ifft2(np.fft.fft2(img) * resp))
+        return _fft_filter(img, ellipsoid_response(img.shape, size))
 
     return _image_apply(px, fn, shape, keys)
 
@@ -364,43 +363,9 @@ def fourier_shift(px: DataFrame, shift, shape, keys=()) -> DataFrame:
     def fn(img: np.ndarray) -> np.ndarray:
         fy = np.fft.fftfreq(img.shape[0])[:, None]
         fx = np.fft.fftfreq(img.shape[1])[None, :]
-        ramp = np.exp(-2j * np.pi * (fy * sy + fx * sx))
-        return np.real(np.fft.ifft2(np.fft.fft2(img) * ramp))
+        return _fft_filter(img, np.exp(-2j * np.pi * (fy * sy + fx * sx)))
 
     return _image_apply(px, fn, shape, keys)
-
-
-def fourier_gaussian_3d(px: DataFrame, sigma: float, shape, keys=()) -> DataFrame:
-    """Rank-3 FFT-domain Gaussian — the fourier ops are rank-generic
-    upstream (``ndfourier`` accepts any dimensionality); this is the n-D
-    surface past 2-D. Same contract as the 2-D path: one whole-volume
-    numpy group per key, separable frequency response, real inverse."""
-    d, h, w = shape
-    keys = list(keys)
-    schema = ", ".join(
-        [*(f"{k} long" for k in keys), "z int", "y int", "x int", "v double"]
-    )
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        img = np.zeros((d, h, w), dtype=np.float64)
-        img[
-            pdf["z"].to_numpy(), pdf["y"].to_numpy(), pdf["x"].to_numpy()
-        ] = pdf["value"].to_numpy()
-        fz = np.fft.fftfreq(d)[:, None, None]
-        fy = np.fft.fftfreq(h)[None, :, None]
-        fx = np.fft.fftfreq(w)[None, None, :]
-        resp = np.exp(-2.0 * np.pi**2 * sigma**2 * (fz**2 + fy**2 + fx**2))
-        out = np.real(np.fft.ifftn(np.fft.fftn(img) * resp))
-        zs, ys, xs = np.indices((d, h, w))
-        res = pd.DataFrame(
-            {"z": zs.ravel(), "y": ys.ravel(), "x": xs.ravel(), "v": out.ravel()}
-        )
-        for k in keys:
-            res[k] = pdf[k].iloc[0]
-        return res[[*keys, "z", "y", "x", "v"]]
-
-    grouped = px.groupBy(*keys) if keys else px.groupBy(F.lit(1).alias("_g"))
-    return grouped.applyInPandas(fn, schema)
 
 
 def edt_envelope_1d(f):

@@ -2,11 +2,11 @@
 a near-duplicate pipeline needs after LSH candidate generation (group all
 transitively-linked duplicates, keep one canonical survivor).
 
-Same algorithm family as ``label_cc.label_iterative`` (min-label propagation
-with per-round ``localCheckpoint``), but keyed by node id instead of grid
-coordinates: works on any id graph, e.g. MinHash candidate pairs. Converges
-in O(diameter) rounds; duplicate clusters are near-cliques in practice, so
-the diameter is tiny and 2-4 rounds suffice.
+Min-label propagation with per-round ``localCheckpoint``, keyed by node id:
+works on any id graph, e.g. MinHash candidate pairs, or the fragment
+adjacency ``label_cc.label`` merges distributed when it outgrows the driver.
+Converges in O(diameter) rounds; duplicate clusters are near-cliques in
+practice, so the diameter is tiny and 2-4 rounds suffice.
 """
 
 from __future__ import annotations

@@ -25,8 +25,10 @@ Final labels are canonical: each component is labeled by the minimum ravel
 index (y*W + x) of its pixels, so output is deterministic regardless of
 block layout or execution order. At 100 TB, stage 1 scales with pixels,
 stage 2 with boundary area, stage 3 with the number of *components touching
-block edges* — if that ever outgrows the driver, the documented fallback is
-iterative min-label broadcast joins with ``localCheckpoint()`` per round.
+block edges* — if that outgrows the driver budget (:data:`MAX_DRIVER_EDGES`),
+stage 3 instead runs distributed: ``graph.min_label_components`` over the
+same stage-2 fragment edges, min-label propagation with ``localCheckpoint()``
+per round, in rounds that scale with the fragment-graph diameter.
 
 Input contract: ``mask`` must have at most one row per (y, x) position
 (duplicate positions would double-count half-edge emissions; the pairing
@@ -43,6 +45,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from dask_image_spark.functions.localrel import values_df
+from dask_image_spark.operators import graph
+
+# Most fragment-adjacency edges stage 3 collects to the driver; a bigger
+# graph is merged distributed instead (see :func:`label`).
+MAX_DRIVER_EDGES = 2_000_000
 
 
 def forward_offsets(structure=None) -> list[tuple[int, int]]:
@@ -151,71 +158,6 @@ def _label_block_np(ys, xs, back_offsets=((-1, 0), (0, -1))):
     return inv.astype(np.int64)
 
 
-def label_iterative(
-    mask: DataFrame, shape: tuple[int, int], mask_col: str = "m",
-    max_iter: int = 200, on_nonconverged: str = "raise", structure=None,
-) -> DataFrame:
-    """Fully-distributed fallback for :func:`label`: iterative min-label
-    propagation over the 4-neighbor graph, for when even the boundary
-    adjacency graph would overwhelm the driver.
-
-    Each true pixel starts as its own ravel-index label; every round takes
-    the min over neighbors' labels; ``localCheckpoint()`` truncates lineage
-    per round (the canonical Spark iterative-algorithm requirement — without
-    it the plan doubles every iteration). Converges in O(graph diameter)
-    rounds — prefer :func:`label` (block pre-label + centralized union-find,
-    O(1) rounds) whenever the adjacency fits the driver, exactly as the
-    reference centralizes its sparse CC solve."""
-    h, w = shape
-    fwd = forward_offsets(structure)
-    both = fwd + [(-dy, -dx) for dy, dx in fwd]
-    lbl = (
-        mask.filter(F.col(mask_col))
-        .select("y", "x")
-        .withColumn("lbl", F.col("y").cast("long") * w + F.col("x"))
-        .localCheckpoint()
-    )
-    converged = False
-    for _ in range(max_iter):
-        nbrs = None
-        for dy, dx in both:
-            shifted = lbl.select(
-                (F.col("y") + dy).alias("y"), (F.col("x") + dx).alias("x"),
-                F.col("lbl").alias("nlbl"),
-            )
-            nbrs = shifted if nbrs is None else nbrs.unionByName(shifted)
-        best = nbrs.groupBy("y", "x").agg(F.min("nlbl").alias("minn"))
-        new = (
-            lbl.join(best, on=["y", "x"], how="left")
-            .select(
-                "y", "x",
-                F.least(F.col("lbl"), F.coalesce("minn", F.col("lbl"))).alias("lbl"),
-                (F.col("minn") < F.col("lbl")).alias("_chg"),
-            )
-        )
-        new = new.localCheckpoint()
-        changed = new.filter(F.col("_chg")).limit(1).count()
-        lbl = new.select("y", "x", "lbl")
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
-        # A component with graph diameter > max_iter would come back silently
-        # under-merged — never return that as if it were a labeling.
-        msg = (
-            f"label_iterative did not converge in max_iter={max_iter} rounds; "
-            "labels may be under-merged (component diameter exceeds the "
-            "iteration budget). Raise max_iter."
-        )
-        if on_nonconverged == "warn":
-            import warnings
-
-            warnings.warn(msg, RuntimeWarning, stacklevel=2)
-        else:
-            raise RuntimeError(msg)
-    return lbl.withColumnRenamed("lbl", "label")
-
-
 def prelabel_partitions(spark, n_blocks: int) -> int:
     """Partition count for :func:`label`'s pandas pre-label exchange: one
     task per block, capped at 4x the session's shuffle width. The cap
@@ -256,8 +198,7 @@ def max_halfedge_rows(
 
 def label(
     mask: DataFrame, shape: tuple[int, int], block: int = 32,
-    mask_col: str = "m", max_driver_edges: int = 2_000_000,
-    structure=None,
+    mask_col: str = "m", structure=None,
 ) -> DataFrame:
     """Label connected components of a boolean mask.
 
@@ -270,9 +211,11 @@ def label(
 
     The boundary-adjacency graph is collected to the driver for the
     union-find merge (stage 3) ONLY while it stays under
-    ``max_driver_edges``; a bigger graph automatically switches to the
-    fully-distributed :func:`label_iterative` path, so callers never have to
-    pick the strategy themselves. When the geometric bound
+    :data:`MAX_DRIVER_EDGES`; a bigger graph is merged distributed by
+    ``graph.min_label_components`` over the same fragment edges (the
+    minimum fragment label reachable is the component's canonical label,
+    because fragment labels are min ravel indices), so callers never have
+    to pick the strategy themselves. When the geometric bound
     (:func:`max_halfedge_rows`) proves the collect cannot exceed the budget,
     the ``distinct().limit(n+1)`` driver-safety probe (two extra exchange
     stages) is skipped and the raw edge rows are collected directly — the
@@ -386,20 +329,26 @@ def label(
         .filter(F.col("lbl") != F.col("lbl_b"))
         .select("lbl", "lbl_b")
     )
-    if max_halfedge_rows(shape, block, fwd) <= max_driver_edges:
+    pix = out.filter(F.col("a") >= 0).select(
+        F.expr(f"CAST(a DIV {w} AS INT)").alias("y"),
+        F.expr(f"CAST(a % {w} AS INT)").alias("x"),
+        "lbl",
+    )
+    if max_halfedge_rows(shape, block, fwd) <= MAX_DRIVER_EDGES:
         # The geometry already proves the collect fits the driver budget:
         # skip the distinct+limit probe (two extra exchange stages,
         # measured ~0.5 s of AQE latency per labeling at 4096^2) and let
         # the driver union-find absorb duplicate pairs.
         head = edges.collect()
     else:
-        head = edges.distinct().limit(max_driver_edges + 1).collect()
-        if len(head) > max_driver_edges:
-            # Adjacency graph too large to centralize: fall back to the
-            # fully-distributed iterative merge instead of OOMing the driver.
-            return label_iterative(
-                mask, shape, mask_col=mask_col, structure=structure
-            )
+        head = edges.distinct().limit(MAX_DRIVER_EDGES + 1).collect()
+        if len(head) > MAX_DRIVER_EDGES:
+            # Fragment graph too large to centralize: merge it distributed
+            # instead of OOMing the driver. Raises if it does not converge.
+            comp = graph.min_label_components(edges, "lbl", "lbl_b")
+            return pix.join(
+                comp.withColumnRenamed("node", "lbl"), on="lbl", how="left"
+            ).select("y", "x", F.coalesce("comp", "lbl").alias("label"))
     pairs = [(r["lbl"], r["lbl_b"]) for r in head]
 
     # stage 3: driver-side union-find over the (small) adjacency graph
@@ -425,11 +374,6 @@ def label(
     # (a fragment with none would be its own component), so every fragment
     # label enters the union-find and the root is the min over ALL the
     # component's pixels; single-block components keep lbl, their own min.
-    pix = out.filter(F.col("a") >= 0).select(
-        F.expr(f"CAST(a DIV {w} AS INT)").alias("y"),
-        F.expr(f"CAST(a % {w} AS INT)").alias("x"),
-        "lbl",
-    )
     if roots:
         root_df = values_df(
             spark, "lbl, root", [(int(k), int(v)) for k, v in roots.items()]

@@ -1,17 +1,19 @@
 """Stencil filters over the R1 pixel table — the ``dask_image.ndfilters``
-surface re-expressed as one join template.
+surface re-expressed as one rank-generic join template.
 
 Reference shape (upstream ``dask_image/ndfilters/``): every filter normalizes
 its arguments then runs ``image.map_overlap(scipy_fn, depth, boundary)`` —
-a halo exchange plus a per-chunk scipy call. The Spark-first equivalent for
-long-form pixels is **pad-then-scatter**:
+a halo exchange plus a per-chunk scipy call, for arrays of any rank. The
+Spark-first equivalent for long-form pixels is **pad-then-scatter**:
 
-    padded  = pixels UNION (edge pixels x broadcast pad-map)  -- no shuffle;
-              border replication is O(perimeter * radius), dask's halo
-    scatter = padded CROSS JOIN broadcast(kernel offsets)     -- no shuffle
+    padded  = pixels UNION (edge pixels x broadcast pad-maps)  -- no shuffle;
+              border replication is O(surface * radius), dask's halo
+    scatter = padded CROSS JOIN broadcast(kernel offsets)      -- no shuffle
               target coord = padded coord - offset, filter in-bounds
-    GROUP BY target coord                                     -- ONE shuffle
+    GROUP BY target coord                                      -- ONE shuffle
 
+One template serves every rank: a rank-N image has the coordinate columns
+:func:`axis_names` (N) and its kernel offsets are ``(d_0, ..., d_{N-1}, w)``.
 Physical plan: pad-maps and kernels are tens of rows, always broadcast; the
 border branches carry a pushable edge predicate so their scans prune to edge
 row-groups. The only exchange in the whole stencil is the final aggregate,
@@ -20,7 +22,8 @@ formulation — join the fanned-out neighbor coords back against the pixel
 table — shuffles the kernel-times-fanned side AND the probe side; scatter
 moves the same fan-out through exactly one shuffle, which is the difference
 at 100 TB.) Separable filters (Gaussian, uniform, prewitt/sobel) are applied
-as per-axis 1-D passes exactly like the reference.
+as per-axis 1-D passes exactly like the reference; each pass pads only the
+axis it filters.
 
 Boundary modes are shared-text SQL remaps (``functions.boundary``), so the
 DuckDB oracle and this engine cannot disagree on edge semantics.
@@ -28,6 +31,9 @@ DuckDB oracle and this engine cannot disagree on edge semantics.
 
 from __future__ import annotations
 
+import functools
+import itertools
+import operator
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
@@ -36,29 +42,33 @@ from pyspark.sql import functions as F
 from dask_image_spark.functions import kernels as K
 from dask_image_spark.functions.boundary import remap_py
 
-Offset2D = tuple[int, int, float]
+# Coordinate column names by rank: a rank-N pixel table carries the trailing
+# N of these (2-D: y, x; 3-D: z, y, x; 4-D: t, z, y, x).
+AXES = ("t", "z", "y", "x")
 
 
-def _kernel_inline(offsets: Sequence[Offset2D]) -> Column:
+def axis_names(rank: int) -> tuple[str, ...]:
+    """Coordinate columns of a rank-``rank`` pixel table."""
+    if not 1 <= rank <= len(AXES):
+        raise ValueError(f"rank {rank} outside 1..{len(AXES)}")
+    return AXES[len(AXES) - rank:]
+
+
+def _kernel_inline(offsets: Sequence[tuple], coords: Sequence[str]) -> Column:
     """Kernel fan-out as ``inline(array(struct...))`` — a literal-array
     explode that stays inside WholeStageCodegen, ~25% faster than a
     broadcast-nested-loop cross join against a kernel table. ``ko`` is the
     offset's ordinal, used by generic_filter to present window values in
-    kernel (raster) order."""
+    kernel (raster) order; ``d<coord>`` is the offset along that axis."""
     structs = [
         F.struct(
             F.lit(i).alias("ko"),
-            F.lit(int(dy)).alias("dy"),
-            F.lit(int(dx)).alias("dx"),
-            F.lit(float(w)).alias("w"),
+            *[F.lit(int(d)).alias(f"d{c}") for c, d in zip(coords, off[:-1])],
+            F.lit(float(off[-1])).alias("w"),
         )
-        for i, (dy, dx, w) in enumerate(offsets)
+        for i, off in enumerate(offsets)
     ]
     return F.inline(F.array(*structs))
-
-
-def _max_radius(offsets: Sequence[Offset2D]) -> int:
-    return max(max(abs(dy), abs(dx)) for dy, dx, _ in offsets)
 
 
 def _pad_pairs(n: int, r: int, mode: str) -> list[tuple[int, int]]:
@@ -89,193 +99,59 @@ def _edge_pred(pairs: list[tuple[int, int]], col: str):
 
 def padded_pixels(
     px: DataFrame,
-    r: int,
-    shape: tuple[int, int],
-    mode: str,
-    cval: float,
-    keys: Sequence[str],
-    value_col: str = "value",
-) -> DataFrame:
-    """Pixels extended to the halo range [-r, h+r) x [-r, w+r).
-
-    Non-constant modes: border rows are copies of edge pixels selected via
-    broadcast pad-map joins (the Spark analog of dask's halo exchange); the
-    branches carry an edge predicate so their scans prune. Constant mode:
-    out-of-range coordinate strips filled with ``cval``.
-    """
-    h, w_dim = shape
-    keys = list(keys)
-    spark = px.sparkSession
-    vtype = px.schema[value_col].dataType.simpleString()
-    body = px.select(*keys, "y", "x", F.col(value_col).alias("_pv"))
-    if r <= 0:
-        return body
-
-    if mode == "constant":
-        fill = F.lit(cval).cast(vtype).alias("_pv")
-
-        def _rng(lo, hi, name):
-            return spark.range(lo, hi).select(F.col("id").cast("int").alias(name))
-
-        ys_out = _rng(-r, 0, "y").union(_rng(h, h + r, "y"))
-        xs_out = _rng(-r, 0, "x").union(_rng(w_dim, w_dim + r, "x"))
-        strips = ys_out.crossJoin(_rng(-r, w_dim + r, "x")).union(
-            _rng(0, h, "y").crossJoin(xs_out)
-        )
-        if keys:
-            strips = px.select(*keys).distinct().crossJoin(strips)
-        return body.unionByName(strips.select(*keys, "y", "x", fill))
-
-    ypairs = _pad_pairs(h, r, mode)
-    xpairs = _pad_pairs(w_dim, r, mode)
-    pady = F.broadcast(_pad_map(spark, ypairs).withColumnsRenamed({"src": "ysrc", "pad": "ypad"}))
-    padx = F.broadcast(_pad_map(spark, xpairs).withColumnsRenamed({"src": "xsrc", "pad": "xpad"}))
-    # restrict border branches to the rows the pad maps can actually source —
-    # a real, pushdown-able range predicate, so those scans prune to the edges
-    y_edge = body.filter(_edge_pred(ypairs, "y"))
-    x_edge = body.filter(_edge_pred(xpairs, "x"))
-    ypad_rows = y_edge.join(pady, F.col("y") == F.col("ysrc")).select(
-        *keys, F.col("ypad").alias("y"), "x", "_pv"
-    )
-    xpad_rows = x_edge.join(padx, F.col("x") == F.col("xsrc")).select(
-        *keys, "y", F.col("xpad").alias("x"), "_pv"
-    )
-    corner_rows = (
-        y_edge.filter(_edge_pred(xpairs, "x"))
-        .join(pady, F.col("y") == F.col("ysrc"))
-        .join(padx, F.col("x") == F.col("xsrc"))
-        .select(*keys, F.col("ypad").alias("y"), F.col("xpad").alias("x"), "_pv")
-    )
-    return body.unionByName(ypad_rows).unionByName(xpad_rows).unionByName(corner_rows)
-
-
-def stencil_gather(
-    px: DataFrame,
-    offsets: Sequence[Offset2D],
-    shape: tuple[int, int],
-    mode: str = "reflect",
-    cval: float = 0.0,
-    keys: Sequence[str] = (),
-    value_col: str = "value",
-    drop_zero_pad: bool = False,
-) -> DataFrame:
-    """Neighborhood gather: one row per (output pixel, kernel offset).
-
-    Returns columns ``*keys, y, x, ko, w, v`` where ``v`` is the
-    boundary-resolved neighbor value. All filter aggregations are GROUP BYs
-    over this. Physically it is a scatter — each padded pixel is fanned to
-    the outputs that read it (target = coord - offset) — so no join against
-    the pixel table is ever needed and the groupBy is the only shuffle.
-
-    ``drop_zero_pad``: valid ONLY for linear (SUM-like) aggregations with
-    ``mode='constant', cval=0`` — out-of-image terms contribute zero, so
-    the border rows are omitted instead of materialized. Order-statistic
-    aggregations (min/median/rank) must keep them.
-    """
-    h, w_dim = shape
-    r = _max_radius(offsets)
-    if r >= min(h, w_dim):
-        raise ValueError(
-            f"kernel radius {r} >= image extent {min(h, w_dim)}: "
-            "single-bounce boundary remap would be invalid"
-        )
-    keys = list(keys)
-    if drop_zero_pad and mode == "constant" and cval == 0.0:
-        pad = px.select(*keys, "y", "x", F.col(value_col).alias("_pv"))
-    else:
-        pad = padded_pixels(px, r, shape, mode, cval, keys, value_col)
-    oy = (F.col("y") - F.col("dy")).alias("oy")
-    ox = (F.col("x") - F.col("dx")).alias("ox")
-    return (
-        pad.select(*keys, "y", "x", "_pv", _kernel_inline(offsets))
-        .select(*keys, oy, ox, "ko", "w", F.col("_pv").alias("v"))
-        .filter(
-            (F.col("oy") >= 0) & (F.col("oy") < h)
-            & (F.col("ox") >= 0) & (F.col("ox") < w_dim)
-        )
-        .withColumnsRenamed({"oy": "y", "ox": "x"})
-    )
-
-
-def _agg_stencil(
-    px: DataFrame,
-    offsets: Sequence[Offset2D],
-    agg: Column,
-    shape: tuple[int, int],
-    mode: str,
-    cval: float,
-    keys: Sequence[str],
-    value_col: str = "value",
-    out_col: str = "v",
-    drop_zero_pad: bool = False,
-) -> DataFrame:
-    g = stencil_gather(
-        px, offsets, shape, mode, cval, keys, value_col, drop_zero_pad
-    )
-    return g.groupBy(*keys, "y", "x").agg(agg.alias(out_col))
-
-
-# --- N-dimensional generalization -------------------------------------------
-#
-# The 2-D template above is the tuned hot path; this section generalizes
-# pad-then-scatter to arbitrary rank (the reference is an N-D library —
-# every dask-image filter takes any-rank arrays). Border branches: one per
-# non-empty subset of axes (2^N - 1; the 2-D code's ypad/xpad/corner is the
-# N=2 instance), each a broadcast pad-map join under a pushable edge
-# predicate. Scatter + single groupBy shuffle as in 2-D.
-
-
-def padded_pixels_nd(
-    px: DataFrame,
     radii: Sequence[int],
     shape: Sequence[int],
     mode: str,
     cval: float,
     coords: Sequence[str],
     keys: Sequence[str] = (),
-    value_col: str = "value",
 ) -> DataFrame:
-    import itertools
+    """Pixels extended to the halo box [-r_i, n_i + r_i) on every axis i;
+    returns ``*keys, *coords, _pv``. Axes with radius 0 are not padded.
 
+    Non-constant modes: one branch per non-empty subset of the padded axes
+    (2^N - 1; at rank 2 the y-edge, x-edge and corner branches). Each
+    branch copies the edge pixels its subset's broadcast pad-maps can
+    source (the Spark analog of dask's halo exchange) and carries a
+    pushable edge predicate per axis, so its scan prunes to the edges.
+    Constant mode: ``cval`` strips built from ``spark.range`` cross joins —
+    coordinate generation only, no data scan, O(surface * radius) rows.
+    """
     keys = list(keys)
     coords = list(coords)
     spark = px.sparkSession
-    body = px.select(*keys, *coords, F.col(value_col).alias("_pv"))
+    body = px.select(*keys, *coords, F.col("value").alias("_pv"))
+    axes = [i for i, r in enumerate(radii) if r > 0]
+    if not axes:
+        return body
+
     if mode == "constant":
-        # The padded box minus the body decomposes disjointly by which axis
-        # subset is out-of-range: for each non-empty subset S, axes in S take
-        # their two out-of-range segments, axes outside S their in-range
-        # segment. Strips are built from spark.range cross joins — pure
-        # coordinate generation, no data scan, O(surface * radius) rows.
-        vtype = px.schema[value_col].dataType.simpleString()
+        vtype = px.schema["value"].dataType.simpleString()
         fill = F.lit(cval).cast(vtype).alias("_pv")
 
         def _rng(lo, hi, name):
-            return spark.range(lo, hi).select(
-                F.col("id").cast("int").alias(name)
-            )
+            return spark.range(lo, hi).select(F.col("id").cast("int").alias(name))
 
-        const_axes = [i for i, r in enumerate(radii) if r > 0]
+        # The padded box minus the body splits into one disjoint strip per
+        # padded axis i: axis i out of range, the axes before it in range,
+        # the axes after it over their full padded range (a point belongs to
+        # the strip of its FIRST out-of-range axis). N strips, not 2^N - 1.
         strips = None
-        for subset_size in range(1, len(const_axes) + 1):
-            for subset in itertools.combinations(const_axes, subset_size):
-                branch = None
-                for i, c in enumerate(coords):
-                    if i in subset:
-                        seg = _rng(-radii[i], 0, c).union(
-                            _rng(shape[i], shape[i] + radii[i], c)
-                        )
-                    else:
-                        seg = _rng(0, shape[i], c)
-                    branch = seg if branch is None else branch.crossJoin(seg)
-                strips = branch if strips is None else strips.union(branch)
-        if strips is None:
-            # zero-radius kernel (center tap only): nothing out of range
-            return body
+        for i in axes:
+            strip = None
+            for j, (c, n, r) in enumerate(zip(coords, shape, radii)):
+                if j < i:
+                    seg = _rng(0, n, c)
+                elif j == i:
+                    seg = _rng(-r, 0, c).union(_rng(n, n + r, c))
+                else:
+                    seg = _rng(-r, n + r, c)
+                strip = seg if strip is None else strip.crossJoin(seg)
+            strips = strip if strips is None else strips.union(strip)
         if keys:
             strips = px.select(*keys).distinct().crossJoin(strips)
         return body.unionByName(strips.select(*keys, *coords, fill))
-    axes = [i for i, r in enumerate(radii) if r > 0]
+
     pairs = {i: _pad_pairs(shape[i], radii[i], mode) for i in axes}
     out = body
     for subset_size in range(1, len(axes) + 1):
@@ -298,58 +174,87 @@ def padded_pixels_nd(
     return out
 
 
-def correlate_nd(
+def stencil_gather(
     px: DataFrame,
     offsets: Sequence[tuple],
     shape: Sequence[int],
     mode: str = "reflect",
     cval: float = 0.0,
-    coords: Sequence[str] = ("z", "y", "x"),
     keys: Sequence[str] = (),
+    drop_zero_pad: bool = False,
 ) -> DataFrame:
-    """N-D cross-correlation: ``offsets`` rows are (d_0, ..., d_{N-1}, w)
-    matching ``coords`` order. Same single-shuffle pad-scatter plan as 2-D."""
-    coords = list(coords)
+    """Neighborhood gather: one row per (output pixel, kernel offset).
+
+    ``offsets`` rows are ``(d_0, ..., d_{N-1}, w)`` with N = ``len(shape)``;
+    the coordinate columns are :func:`axis_names` of N. Returns columns
+    ``*keys, *coords, ko, w, v`` where ``v`` is the boundary-resolved
+    neighbor value. All filter aggregations are GROUP BYs over this.
+    Physically it is a scatter — each padded pixel is fanned to the outputs
+    that read it (target = coord - offset) — so no join against the pixel
+    table is ever needed and the groupBy is the only shuffle. Each axis is
+    padded by its own kernel radius, so a separable 1-D pass pads one axis.
+
+    ``drop_zero_pad``: valid ONLY for linear (SUM-like) aggregations with
+    ``mode='constant', cval=0`` — out-of-image terms contribute zero, so
+    the border rows are omitted instead of materialized. Order-statistic
+    aggregations (min/median/rank) must keep them.
+    """
+    coords = axis_names(len(shape))
+    radii = [max(abs(off[i]) for off in offsets) for i in range(len(shape))]
+    for i, (r, n) in enumerate(zip(radii, shape)):
+        if r >= n:
+            raise ValueError(
+                f"kernel radius {r} >= image extent {n} on axis {i}: "
+                "single-bounce boundary remap would be invalid"
+            )
     keys = list(keys)
-    n = len(coords)
-    radii = [
-        max(abs(off[i]) for off in offsets) for i in range(n)
-    ]
-    for i, r in enumerate(radii):
-        if r >= shape[i]:
-            raise ValueError(f"kernel radius {r} >= extent {shape[i]} on axis {i}")
-    pad = padded_pixels_nd(px, radii, shape, mode, cval, coords, keys)
-    structs = [
-        F.struct(
-            *[F.lit(int(off[i])).alias(f"_d{i}") for i in range(n)],
-            F.lit(float(off[n])).alias("_w"),
-        )
-        for off in offsets
-    ]
-    scat = pad.select(*keys, *coords, "_pv", F.inline(F.array(*structs)))
-    targets = [
-        (F.col(c) - F.col(f"_d{i}")).alias(f"_t{i}")
-        for i, c in enumerate(coords)
-    ]
-    scat = scat.select(
-        *keys, *targets, (F.col("_pv") * F.col("_w")).alias("_wv")
+    if drop_zero_pad and mode == "constant" and cval == 0.0:
+        pad = px.select(*keys, *coords, F.col("value").alias("_pv"))
+    else:
+        pad = padded_pixels(px, radii, shape, mode, cval, coords, keys)
+    targets = [(F.col(c) - F.col(f"d{c}")).alias(f"o{c}") for c in coords]
+    in_bounds = functools.reduce(
+        operator.and_,
+        [
+            cond
+            for c, n in zip(coords, shape)
+            for cond in (F.col(f"o{c}") >= 0, F.col(f"o{c}") < n)
+        ],
     )
-    for i, c in enumerate(coords):
-        scat = scat.filter((F.col(f"_t{i}") >= 0) & (F.col(f"_t{i}") < shape[i]))
-    renamed = scat.withColumnsRenamed({f"_t{i}": c for i, c in enumerate(coords)})
-    return renamed.groupBy(*keys, *coords).agg(F.sum("_wv").alias("v"))
+    return (
+        pad.select(*keys, *coords, "_pv", _kernel_inline(offsets, coords))
+        .select(*keys, *targets, "ko", "w", F.col("_pv").alias("v"))
+        .filter(in_bounds)
+        .withColumnsRenamed({f"o{c}": c for c in coords})
+    )
+
+
+def _agg_stencil(
+    px: DataFrame,
+    offsets: Sequence[tuple],
+    agg: Column,
+    shape: Sequence[int],
+    mode: str,
+    cval: float,
+    keys: Sequence[str],
+    drop_zero_pad: bool = False,
+) -> DataFrame:
+    g = stencil_gather(px, offsets, shape, mode, cval, keys, drop_zero_pad)
+    return g.groupBy(*keys, *axis_names(len(shape))).agg(agg.alias("v"))
 
 
 # --- the public ndfilters surface -------------------------------------------
 
 
 def correlate(px, weights, shape, mode="reflect", cval=0.0, keys=()):
-    """Cross-correlation with an offset kernel (``ndfilters/_conv.py``).
+    """Cross-correlation with an offset kernel (``ndfilters/_conv.py``) at
+    any rank: ``weights`` rows are ``(d_0, ..., d_{N-1}, w)`` for an
+    N = ``len(shape)`` image.
 
     constant/cval=0 skips border materialization (zero terms drop out of the
-    SUM); requires the kernel to contain offset (0,0) so every in-bounds
+    SUM); requires the kernel to contain the zero offset so every in-bounds
     output keeps at least its self-term row."""
-    has_center = any(dy == 0 and dx == 0 for dy, dx, _ in weights)
+    has_center = any(not any(off[:-1]) for off in weights)
     return _agg_stencil(
         px, weights, F.sum(F.col("v") * F.col("w")), shape, mode, cval, keys,
         drop_zero_pad=has_center,
@@ -463,8 +368,8 @@ def gaussian_filter(
     for axis in (0, 1):
         taps = K.gaussian_taps_1d(sigmas[axis], orders[axis], truncate)
         # NOTE (chained-stencil recompute rule, SCALE.md imaging section):
-        # pass 2's non-constant padding references pass 1 from body + edge
-        # + corner union branches. An operator-internal cache() here was
+        # pass 2's non-constant padding references pass 1 from the body and
+        # edge union branches. An operator-internal cache() here was
         # measured a NET LOSS across the suite: it costs ~0.3 s of fixed
         # materialization on every single-reference consumer (edge_canny
         # 2.18 -> 2.50 s) and only pays when the CALLER re-references the

@@ -18,42 +18,19 @@ def tokens(text_col: str = "text") -> Column:
     return F.split(F.col(text_col), " ")
 
 
-def shingles_of(tokens_col: Column | str, k: int = 3) -> Column:
-    """k-token shingles over an ALREADY-MATERIALIZED token-array column.
-
-    transform over a 0..n-k index sequence + slice: pure JVM array ops.
-    Callers must pre-filter docs with fewer than k tokens (Spark's
-    ``sequence`` would run backwards on a negative stop).
-
-    The tokens must be a projected column, not the ``split(...)`` expression
-    itself: the lambda references the array per index, and Catalyst inlines
-    a passed-in expression into the lambda body — re-tokenizing the document
-    for EVERY shingle, turning shingling O(tokens^2) per doc (measured 3x
-    on the minhash bench before this split).
-    """
-    t = F.col(tokens_col) if isinstance(tokens_col, str) else tokens_col
-    return F.transform(
-        F.sequence(F.lit(0), F.size(t) - k),
-        lambda i: F.concat_ws(" ", F.slice(t, i + 1, k)),
-    )
-
-
 def exploded_shingles(
     docs: DataFrame, k: int = 3,
     id_col: str = "doc_id", text_col: str = "text",
-    widen: bool | None = None,
 ) -> DataFrame:
     """(id, sh) rows: one per k-shingle, tokenizing each document ONCE (the
     token array is projected before the generator so the plan keeps a
     Project under the Generate, exactly like the hand-written SQL form).
 
-    ``widen``: force (True) or suppress (False) the under-split
-    repartition below; the default ``None`` auto-detects from the scan's
-    split count, which makes the PLAN SHAPE machine-dependent (same
-    results, different Exchange count) — plan-pinning tests over shingle
-    queries must either pass an explicit value or avoid asserting on this
-    exchange, and the auto probe costs one driver-side ``.rdd`` plan
-    conversion per call.
+    The under-split repartition below is decided from the scan's split
+    count, which makes the PLAN SHAPE machine-dependent (same results,
+    different Exchange count) — plan-pinning tests over shingle queries
+    must not assert on this exchange — and the probe costs one driver-side
+    ``.rdd`` plan conversion per call.
     """
     t_df = docs.select(id_col, tokens(text_col).alias("_t")).filter(
         F.size("_t") >= k
@@ -71,14 +48,11 @@ def exploded_shingles(
     # no extra exchange is paid.
     spark = docs.sparkSession
     target = spark.sparkContext.defaultParallelism
-    if widen is None:
-        widen = t_df.rdd.getNumPartitions() < target
-    if widen:
+    if t_df.rdd.getNumPartitions() < target:
         t_df = t_df.repartition(target, id_col)
     # Explode the 0..n-k index range and assemble each shingle with plain
-    # getItem/concat_ws — NOT transform+slice (:func:`shingles_of`): Spark
-    # evaluates higher-order-function lambdas interpreted, outside
-    # whole-stage codegen, so the transform form paid ~21 us per shingle
+    # getItem/concat_ws — NOT a transform+slice lambda: Spark evaluates
+    # higher-order-function lambdas interpreted, outside whole-stage codegen, so the transform form paid ~21 us per shingle
     # building the full shingle array per doc before exploding. The
     # sequence explode + direct indexing fuses into the codegen stage and
     # never materializes the array (measured 2.56 s -> 1.62 s for the
@@ -328,7 +302,6 @@ def simhash16_sql(text_expr: str = "text") -> str:
 
 def simhash60_signatures(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-    widen: bool | None = None,
 ) -> DataFrame:
     """(id, h) frame of 60-BIT SimHash signatures — the banding-grade
     width (Manku/Jain/Das Sarma, WWW'07, use 64 bits; 60 here keeps every
@@ -343,10 +316,14 @@ def simhash60_signatures(
     Bit i's vote for a token comes from hex digit (i mod 30)+1 of
     md5(token) for bits 0-29 and of md5('q:' || token) for bits 30-59
     (digit >= '8' votes +1, else -1 — 8 of 16 hex digits, balanced).
-    Each md5 is computed ONCE per token (projected before the votes —
-    the lambda-inlining trap documented on :func:`shingles_of`) and the
-    60 per-bit vote sums are 60 conditional-sum AGGREGATE COLUMNS of one
-    groupBy(id) — plain codegen'd substr/when/sum expressions. The
+    Each md5 is computed ONCE per token, projected before the votes: a
+    passed-in expression referenced inside a lambda (or per bit) is
+    inlined by Catalyst into every reference, re-evaluating it each time —
+    the same trap that, with ``split(...)`` passed to a per-index shingle
+    lambda, re-tokenized the document for EVERY shingle (O(tokens^2) per
+    doc, measured 3x on the minhash bench). The 60 per-bit vote sums
+    are 60 conditional-sum AGGREGATE COLUMNS of one groupBy(id) — plain
+    codegen'd substr/when/sum expressions. The
     previous form built the per-token vote array with two ``transform``
     higher-order lambdas (evaluated INTERPRETED, outside whole-stage
     codegen — the :func:`exploded_shingles` disease), posexploded it to
@@ -357,19 +334,17 @@ def simhash60_signatures(
     result-identical). Linear in corpus size, no Python. DuckDB twin:
     :func:`simhash60_sql_ctes`.
 
-    ``widen`` follows :func:`exploded_shingles`: the token fan-out, the
-    2 md5s/token and the 60 vote sums all fuse into the SCAN's stage, so
-    an under-split corpus runs the whole signature on a few cores
-    (measured: 6-task stage, 106 s at 85k docs; 31 s after the widen).
-    When the scan under-splits, hash-repartition the documents (tiny
-    rows) by id first — the groupBy(id) below then reuses that
-    partitioning and the signature runs shuffle-free; at cluster scale
-    parquet yields enough splits and no extra exchange is paid."""
+    The under-split repartition follows :func:`exploded_shingles`: the
+    token fan-out, the 2 md5s/token and the 60 vote sums all fuse into the
+    SCAN's stage, so an under-split corpus runs the whole signature on a
+    few cores (measured: 6-task stage, 106 s at 85k docs; 31 s after the
+    repartition). When the scan under-splits, hash-repartition the
+    documents (tiny rows) by id first — the groupBy(id) below then reuses
+    that partitioning and the signature runs shuffle-free; at cluster
+    scale parquet yields enough splits and no extra exchange is paid."""
     spark = docs.sparkSession
     target = spark.sparkContext.defaultParallelism
-    if widen is None:
-        widen = docs.rdd.getNumPartitions() < target
-    if widen:
+    if docs.rdd.getNumPartitions() < target:
         docs = docs.repartition(target, id_col)
     toks = docs.select(
         id_col, F.explode(tokens(text_col)).alias("tok")

@@ -790,7 +790,7 @@ def _filter3d_oracle() -> str:
           tags=("imaging", "ndfilters", "3d"))
 def filter_laplace_3d(spark, sf_dir):
     """The N-dimensional surface: a 3-D 6-neighbor Laplacian over a 16^3
-    volume through ``correlate_nd`` — the same pad-scatter plan at rank 3
+    volume through ``correlate`` — the same pad-scatter plan at rank 3
     (reference filters accept any rank; this grades ours past 2-D)."""
     ev = load_table(spark, sf_dir, "events")
     px3 = ev.groupBy(
@@ -798,7 +798,7 @@ def filter_laplace_3d(spark, sf_dir):
         F.expr(f"CAST((event_id div {_VOL}) % {_VOL} AS INT)").alias("y"),
         F.expr(f"CAST((event_id div {_VOL * _VOL}) % {_VOL} AS INT)").alias("x"),
     ).agg(F.sum("value").alias("value"))
-    out = ndfilters.correlate_nd(
+    out = ndfilters.correlate(
         px3, _K3D, (_VOL, _VOL, _VOL), mode="reflect"
     )
     return out.select("z", "y", "x", _eps_round("v", 4).alias("v"))
@@ -956,7 +956,7 @@ def filter_laplace_4d(spark, sf_dir):
     """RANK 4 — the any-rank claim made concrete past volumes: an
     8-neighbor Laplacian over an 8^4 (t, z, y, x) hypervolume, the shape
     of a (time, depth, height, width) microscopy sequence, through the
-    SAME generic ``correlate_nd`` pad-scatter plan as the 3-D query
+    SAME rank-generic ``correlate`` pad-scatter plan as the 3-D query
     (boundary branches are the 2^N - 1 axis subsets; N only changes how
     many broadcast pad-map joins feed the one shuffle). Upstream accepts
     any-rank dask arrays; this grades ours at the rank where hand-rolled
@@ -968,9 +968,7 @@ def filter_laplace_4d(spark, sf_dir):
         F.expr(f"CAST((event_id div {_HV ** 2}) % {_HV} AS INT)").alias("y"),
         F.expr(f"CAST((event_id div {_HV ** 3}) % {_HV} AS INT)").alias("x"),
     ).agg(F.sum("value").alias("value"))
-    out = ndfilters.correlate_nd(
-        px4, _K4D, (_HV,) * 4, mode="reflect", coords=("t", "z", "y", "x")
-    )
+    out = ndfilters.correlate(px4, _K4D, (_HV,) * 4, mode="reflect")
     return out.select("t", "z", "y", "x", _eps_round("v", 4).alias("v"))
 
 
@@ -1017,7 +1015,7 @@ def morph_erosion_3d(spark, sf_dir):
         "z", "y", "x",
         (F.col("value") > F.col("_thr")).cast("double").alias("value"),
     )
-    out = ndfilters.correlate_nd(
+    out = ndfilters.correlate(
         mask3, _ST3D, (_VOL, _VOL, _VOL), mode="constant", cval=0.0
     )
     return out.select("z", "y", "x", (F.col("v") == len(_ST3D)).alias("v"))
@@ -1053,7 +1051,7 @@ def filter_laplace_3d_constant(spark, sf_dir):
         F.expr(f"CAST((event_id div {_VOL}) % {_VOL} AS INT)").alias("y"),
         F.expr(f"CAST((event_id div {_VOL * _VOL}) % {_VOL} AS INT)").alias("x"),
     ).agg(F.sum("value").alias("value"))
-    out = ndfilters.correlate_nd(
+    out = ndfilters.correlate(
         px3, _K3D, (_VOL, _VOL, _VOL), mode="constant", cval=1.5
     )
     return out.select("z", "y", "x", _eps_round("v", 4).alias("v"))
@@ -1324,7 +1322,7 @@ def fourier_gaussian_3d(spark, sf_dir):
         F.expr(f"CAST((event_id div {_VOL}) % {_VOL} AS INT)").alias("y"),
         F.expr(f"CAST((event_id div {_VOL * _VOL}) % {_VOL} AS INT)").alias("x"),
     ).agg(F.sum("value").alias("value"))
-    out = chunked.fourier_gaussian_3d(
+    out = chunked.fourier_gaussian(
         px3, sigma=1.0, shape=(_VOL, _VOL, _VOL), keys=["vol"]
     )
     return out.select("vol", "z", "y", "x", _eps_round("v", 4).alias("v"))

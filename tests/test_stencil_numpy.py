@@ -9,6 +9,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from dask_image_spark.functions import kernels as K
 from dask_image_spark.functions.localrel import values_df
 from dask_image_spark.operators import ndfilters, ndmorph
 
@@ -141,33 +142,58 @@ def test_binary_erosion_dilation_duality(spark):
     np.testing.assert_array_equal(ero.astype(bool), ~dil.astype(bool))
 
 
-@pytest.mark.parametrize("mode", ["reflect", "wrap", "nearest", "constant"])
-def test_correlate_nd_3d_matches_numpy(spark, mode):
-    """Rank-3 differential: correlate_nd vs dense numpy padding (constant
-    mode with nonzero cval covers the N-D pad strips added in round 2)."""
-    D = 6
+@pytest.mark.parametrize(
+    "rank, mode",
+    [
+        pytest.param(3, "reflect", id="reflect"),
+        pytest.param(3, "wrap", id="wrap"),
+        pytest.param(3, "nearest", id="nearest"),
+        pytest.param(3, "constant", id="constant"),
+        pytest.param(4, "reflect", id="4d-reflect"),
+        pytest.param(4, "constant", id="4d-constant"),
+    ],
+)
+def test_correlate_nd_3d_matches_numpy(spark, rank, mode):
+    """Rank-3 and rank-4 differential: the rank-generic ``correlate`` vs
+    dense numpy padding (constant mode with nonzero cval covers the N
+    disjoint constant pad strips)."""
+    D = 6 if rank == 3 else 4
     rng = np.random.default_rng(5)
-    vol = np.round(rng.uniform(-2, 2, size=(D, D, D)), 3)
-    rows = [
-        (z, y, x, float(vol[z, y, x]))
-        for z in range(D) for y in range(D) for x in range(D)
-    ]
-    px = values_df(spark, "z, y, x, value", rows)
-    k = [(0, 0, 0, -6.0)] + [
-        (dz, dy, dx, 1.0)
-        for dz, dy, dx in [(-1, 0, 0), (1, 0, 0), (0, -1, 0), (0, 1, 0),
-                           (0, 0, -1), (0, 0, 1)]
-    ]
-    got = np.full((D, D, D), np.nan)
-    res = ndfilters.correlate_nd(px, k, (D, D, D), mode=mode, cval=1.25)
+    vol = np.round(rng.uniform(-2, 2, size=(D,) * rank), 3)
+    coords = ndfilters.axis_names(rank)
+    rows = [(*map(int, idx), float(vol[idx])) for idx in np.ndindex(vol.shape)]
+    px = values_df(spark, ", ".join([*coords, "value"]), rows)
+    k = [(0,) * rank + (-2.0 * rank,)]
+    for axis in range(rank):
+        for d in (-1, 1):
+            off = [0] * rank
+            off[axis] = d
+            k.append((*off, 1.0))
+    got = np.full(vol.shape, np.nan)
+    res = ndfilters.correlate(px, k, vol.shape, mode=mode, cval=1.25)
     for r in res.collect():
-        got[r["z"], r["y"], r["x"]] = r["v"]
+        got[tuple(r[c] for c in coords)] = r["v"]
     if mode == "constant":
         pad = np.pad(vol, 1, mode="constant", constant_values=1.25)
     else:
         pad = np.pad(vol, 1, mode=NP_PAD_MODE[mode])
     want = np.zeros_like(vol)
-    for dz, dy, dx, w in k:
-        want += w * pad[1 + dz : 1 + dz + D, 1 + dy : 1 + dy + D,
-                        1 + dx : 1 + dx + D]
+    for *off, w in k:
+        want += w * pad[tuple(slice(1 + d, 1 + d + D) for d in off)]
     np.testing.assert_allclose(got, want, rtol=1e-9, atol=1e-9)
+
+
+def test_separable_pass_pads_only_its_axis(spark, monkeypatch):
+    """A 1-D y-pass pads y alone: (H + 2r) * W padded rows, no x halo."""
+    taps = K.gaussian_taps_1d(1.0, 0, 4.0)
+    r = max(abs(o) for o, _ in taps)
+    padded = []
+    real = ndfilters.padded_pixels
+
+    def spy(*args, **kwargs):
+        padded.append(real(*args, **kwargs))
+        return padded[-1]
+
+    monkeypatch.setattr(ndfilters, "padded_pixels", spy)
+    ndfilters.correlate(_px(spark), K.taps_to_offsets_1d(taps, 0), (H, W))
+    assert padded[0].count() == (H + 2 * r) * W

@@ -76,7 +76,7 @@ def test_correlate_nd_3d_random(spark, seed, kernel, mode):
     ]
     px = values_df(spark, "z, y, x, value", rows)
     got = np.full((D, D, D), np.nan)
-    res = ndfilters.correlate_nd(px, kernel, (D, D, D), mode=mode, cval=0.75)
+    res = ndfilters.correlate(px, kernel, (D, D, D), mode=mode, cval=0.75)
     for r in res.collect():
         got[r["z"], r["y"], r["x"]] = r["v"]
 
