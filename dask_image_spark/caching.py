@@ -3,7 +3,7 @@
 An operator or query builder cannot unpersist its own caches: the returned
 DataFrame is consumed later, by a caller it doesn't control, so the cache
 must outlive the builder call — but not the session. Every cache is
-registered here and the harnesses (bench.py after each query, tests via
+registered here and the harnesses (perfbench after each job, tests via
 fixture teardown) call :func:`release_caches` once the result is
 materialized. An UNTRACKED ``.cache()`` inside an operator has no release
 path at all: entries accumulate for the session lifetime, one per distinct

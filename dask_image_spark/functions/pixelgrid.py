@@ -37,7 +37,7 @@ def pixel_grid(spark: SparkSession, sf_dir: str, grid: int = GRID) -> DataFrame:
     by Spark's CacheManager on the canonicalized plan, so repeated calls
     share one entry (grid is ~4k rows — negligible memory), and registering
     through ``persist_tracked`` (instead of a bare ``cache()``) lets
-    ``release_caches()`` drop the entry after each query/bench row instead
+    ``release_caches()`` drop the entry after each query instead
     of pinning it for the session's lifetime (round-14 hygiene; rebuilding
     the grid is one small events aggregation).
     """

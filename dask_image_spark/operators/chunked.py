@@ -115,7 +115,7 @@ def spline_filter1d(
     contract. Spark's CacheManager dedupes on the canonicalized plan, so
     repeated construction shares one entry, and registering through
     ``persist_tracked`` (instead of a bare ``cache()``) gives the entry a
-    release path — ``release_caches()`` after each query/bench row —
+    release path — ``release_caches()`` after each query —
     instead of pinning one coefficient frame per distinct image/order in
     executor storage for the session's lifetime (round-14 hygiene)."""
     keys = list(keys)

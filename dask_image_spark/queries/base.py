@@ -28,7 +28,7 @@ def r(col: Column | str, n: int = 4) -> Column:
 # Session-scoped bookkeeping for persist()ed intermediates — moved to
 # dask_image_spark.caching (round 14) so OPERATORS can register caches
 # without a queries-layer import; re-exported here for every existing
-# call site (query builders, bench.py, test teardown).
+# call site (query builders, test teardown).
 from dask_image_spark.caching import (  # noqa: F401  (re-export)
     persist_tracked,
     release_caches,
@@ -57,69 +57,65 @@ REGISTRY: dict[str, Query] = {}
 # first, then every other strong-oracle query in registration order, then
 # oracle-less (weak rows-only) queries last so they never burn graded slots.
 #
-# Round 14 window (fixed in round 12 alongside the round-13 staging —
-# COVERAGE.md "Round-14 window"; VERDICT_r12 item 2): the never-graded
-# backlog is drained (0 since round 13), so the evidence-freshness
-# rotation is now the steady state.  This window = the remaining 16
-# round-2 grades + all 34 round-3 grades, exactly 50, in registration
-# order.  Registry stays FROZEN at 542.  The queue was pre-verified at
-# sf0.1 in round 12 (49/50 parity-green; scan_binaryfile raises by
-# design at non-grading SFs and is green at the grading sf0.001/0.01).
-# Floor math: after round 14 drains this window zero round-2/round-3
-# evidence remains; round 15 takes the 47 round-4 + 3 oldest round-5
-# grades (round-4 evidence trips the capped floor of 13 only at round
-# 18 — three rounds of slack); rotation continues oldest-first.
+# Round 15 window (COVERAGE.md "round-15 staging"): the evidence-freshness
+# rotation, oldest grades first.  This window = the 47 queries whose newest
+# grade is round 4 + the first 3 (in registration order) whose newest grade
+# is round 5, exactly 50, in registration order, counted from the committed
+# CORRECTNESS_r*.json files.  Registry stays FROZEN at 542.
+# Floor math: after round 15 drains this window zero round-4 evidence
+# remains; round 16 takes the remaining 44 round-5 grades + the first 6
+# round-6 grades; rotation continues oldest-first.
 WINDOW: list[str] = [
-    "similarity_top10",
-    "similarity_lsh_buckets",
-    "knn_per_label",
-    "similarity_ivf_topk",
-    "token_stats",
-    "token_topk",
-    "tfidf_top_term",
-    "lang_id",
-    "quality_score",
-    "doc_fingerprint",
-    "udtf_ngrams",
-    "time_rollup_multires",
-    "multimodal_meta",
-    "multimodal_frames",
-    "filter_project",
-    "scan_binaryfile",
-    "filter_uniform_even",
-    "filter_minimum_even",
-    "filter_median5_r2_tiles",
-    "morph_dilation_square",
-    "morph_erosion_3d",
-    "filter_laplace_3d_constant",
-    "affine_order3_identity",
-    "spline_filter",
-    "fourier_gaussian",
-    "fourier_ellipsoid",
-    "fourier_uniform",
-    "affine_order2_identity",
-    "affine_order5_identity",
-    "dedup_minhash_lsh",
-    "dedup_minhash_survivors",
-    "kmeans_lloyd_2iter",
-    "knn_graph_lsh",
-    "similarity_ivf_multiprobe",
-    "text_normalize",
-    "token_bpe_count",
-    "quality_lm_bigram",
-    "imread_pgm",
-    "imread_png",
-    "imread_tiff",
-    "multimodal_resize",
-    "scan_csv_roundtrip",
-    "scan_json_roundtrip",
-    "scan_partitioned_parquet",
-    "upsert_latest_wins",
-    "profile_table",
-    "string_funcs",
-    "date_funcs",
-    "json_funcs",
-    "pivot_events",
+    "pii_redact",
+    "chunk_overlap",
+    "token_zipf",
+    "mine_hard_negatives",
+    "dedup_semantic",
+    "mix_temperature",
+    "embedding_pca_power",
+    "bm25_search",
+    "kl_source_drift",
+    "dedup_substring_spans",
+    "filter_correlate",
+    "filter_convolve",
+    "filter_uniform",
+    "filter_minimum",
+    "filter_maximum",
+    "filter_median",
+    "filter_rank",
+    "filter_gaussian",
+    "filter_laplace",
+    "filter_laplace_3d",
+    "filter_box_multi_image",
+    "measure_area",
+    "measure_minimum_position",
+    "measure_histogram",
+    "measure_find_objects",
+    "fourier_gaussian_3d",
+    "affine_order1_3d",
+    "fourier_shift_frac",
+    "affine_order4_identity",
+    "label_cc",
+    "label_cc_8conn",
+    "generic_filter_mad",
+    "dedup_lsh_salted_skew",
+    "imread_glob_nframes",
+    "sample_stratified",
+    "pack_sequences",
+    "embedding_quantize_int8",
+    "ann_recall_ivf",
+    "inverted_index",
+    "curation_pipeline",
+    "contamination_check",
+    "ivf_kmeans_topk",
+    "quality_repetition",
+    "scan_orc_roundtrip",
+    "winsorize_values",
+    "asof_join_forward",
+    "gap_fill_hours",
+    "split_group_hash",
+    "tfidf_cosine_pairs",
+    "token_pmi_bigrams",
 ]
 
 

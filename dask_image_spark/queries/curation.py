@@ -907,12 +907,7 @@ def tfidf_cosine_pairs(spark, sf_dir):
 
     Threshold compares the EPS-rounded value on both engines so a 1-ulp
     dot difference can't flip membership."""
-    return tfidf_pairs_impl(load_table(spark, sf_dir, "documents"))
-
-
-def tfidf_pairs_impl(docs):
-    """The tfidf_cosine_pairs plan over an arbitrary (doc_id, text) frame
-    — shared with the bench 4x slope point (bench.py::tfidf_pairs_4x)."""
+    docs = load_table(spark, sf_dir, "documents")
     n = (
         docs.filter(F.col("text").isNotNull())
         .agg(F.count(F.lit(1)).cast("double").alias("n_docs"))
@@ -4622,9 +4617,7 @@ _DBSCAN_EPS, _DBSCAN_MINPTS = 0.08, 10
 
 def dbscan_core_counts(pts):
     """Blocked neighbor counting for (vec_id, x, y) points: 9-cell
-    eps-grid probe join + exact distance filter. Shared by the graded
-    query and the bench slope point (which runs it on an 8x-augmented
-    frame) so the benched plan IS the graded plan."""
+    eps-grid probe join + exact distance filter."""
     from dask_image_spark.functions.localrel import values_df
 
     spark = pts.sparkSession

@@ -82,56 +82,13 @@ def assert_contiguous_positions(pdf, what: str) -> int:
     return n
 
 
-# 4x scale augmentation for the BENCH slope twins (VERDICT r7 item 4):
-# four re-keyed copies of the corpus, each with a different vowel rotation
-# applied to the text. translate() is a cheap map-side codegen expression,
-# and rotating vowels dissociates almost every shingle/token across copies
-# — so vocabulary, shingle sets, and LSH buckets replicate i.i.d. (same
-# per-copy df and bucket-size distributions, 4x the keys) instead of
-# producing pathological 4-way identical-text collisions. Both the engine
-# bench special and the stock twin interpolate THESE constants, so the A/B
-# can never de-pair (the _DUP_STRIDE precedent).
+# Corpus augmentation for scripts/scale_parity_x{16,64,256}.py: re-keyed
+# copies whose text gets a vowel (past 4x also a consonant) rotation.
+# Rotating letters dissociates almost every shingle/token across copies,
+# so vocabulary and LSH buckets replicate i.i.d. instead of colliding.
 X4_OFFSET = 20_000_000
 X4_ROTS = ("aeiou", "eioua", "iouae", "ouaei")
-
-
-def docs_x4(spark, sf_dir):
-    """The 4x-augmented documents frame used by the bench slope points."""
-    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    out = None
-    for c, rot in enumerate(X4_ROTS):
-        cp = d.select(
-            (F.col("doc_id") + c * X4_OFFSET).alias("doc_id"),
-            F.translate("text", "aeiou", rot).alias("text"),
-        )
-        out = cp if out is None else out.unionAll(cp)
-    return out
-
-
-# Third size point for the band-join slope: 16 copies = the 4 vowel
-# rotations crossed with 4 consonant rotations (every composed transform
-# produces a distinct token stream, so shingles replicate i.i.d. exactly
-# as in docs_x4 — same property, 4x more of it). The stock twin
-# interpolates the same constants (scripts/baseline_stock.py).
 X16_CROTS = ("rstln", "stlnr", "tlnrs", "lnrst")
-
-
-def docs_x16(spark, sf_dir):
-    """The 16x-augmented documents frame (third slope point)."""
-    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    out = None
-    for c, rot in enumerate(X4_ROTS):
-        for c2, crot in enumerate(X16_CROTS):
-            cp = d.select(
-                (
-                    F.col("doc_id") + (c * 4 + c2) * X4_OFFSET
-                ).alias("doc_id"),
-                F.translate(
-                    F.translate("text", "aeiou", rot), "rstln", crot
-                ).alias("text"),
-            )
-            out = cp if out is None else out.unionAll(cp)
-    return out
 
 
 @register(

@@ -194,7 +194,7 @@ def mg_heavy_hitters(spark, sf_dir):
         # guarantee is intact — and since the exact rescan only counts
         # candidates, the query OUTPUT is identical to the per-row
         # formulation it replaces at ~5x less Python-interpreter time
-        # per partition (micro-bench in scripts/README_bench_notes.md).
+        # per partition.
         from collections import Counter
 
         from dask_image_spark.operators.sketches import mg_merge_counts

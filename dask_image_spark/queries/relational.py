@@ -909,16 +909,7 @@ def q21_suppliers_kept_waiting(spark, sf_dir):
     never a BroadcastNestedLoopJoin over the fact table (plan-pinned in
     tests/test_plans.py). Three shuffles on the same l_orderkey key
     (AQE reuses the exchange), 25-row heap at the end."""
-    return q21_waiting_over(
-        spark, sf_dir, load_table(spark, sf_dir, "lineitem")
-    )
-
-
-def q21_waiting_over(spark, sf_dir, li):
-    """Q21's plan over an injectable lineitem frame (see
-    :func:`q9_profit_over`) — bench.py's ``q21_4x`` slope point feeds
-    :func:`lineitem_x4`, growing all three self-join sides 4x on the
-    same l_orderkey key."""
+    li = load_table(spark, sf_dir, "lineitem")
     s = load_table(spark, sf_dir, "supplier")
     o = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderstatus") == "F"
@@ -1217,16 +1208,7 @@ def q9_product_type_profit(spark, sf_dir):
     the spec's. Scale shape: the name pattern prunes part BEFORE its
     broadcast, supplier+nation broadcast, and the orders join carries
     only the order date; one fact shuffle + a 175-group aggregate."""
-    return q9_profit_over(
-        spark, sf_dir, load_table(spark, sf_dir, "lineitem")
-    )
-
-
-def q9_profit_over(spark, sf_dir, li):
-    """Q9's plan over an injectable lineitem frame — the graded query
-    passes the real fact table; bench.py's ``q9_4x`` slope point passes
-    :func:`lineitem_x4` so the fact side grows 4x while the dimension
-    broadcasts stay constant."""
+    li = load_table(spark, sf_dir, "lineitem")
     p = load_table(spark, sf_dir, "part").filter(
         F.col("p_name").like("%bolt%")
     ).select("p_partkey", "p_retailprice")
@@ -1248,7 +1230,7 @@ def q9_profit_over(spark, sf_dir, li):
 
 
 def lineitem_x4(spark, sf_dir):
-    """Fact-growth augmentation for the TPC-H slope points: every
+    """Fact-growth augmentation for scripts/scale_parity_x16.py: every
     lineitem row replicated 4x (explode over a 4-literal array — a
     zero-shuffle generator). Row count scales 4x while the KEY DOMAIN is
     unchanged, which is exactly the axis a growing fact table moves

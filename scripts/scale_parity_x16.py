@@ -40,8 +40,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 BASE = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 OUT = "/tmp/dask_image_spark_scale/x16"
 
-# The shuffle-heaviest registered queries (VERDICT r9 plan audit +
-# bench.py HEADLINE): TPC-H heavy aggregation/join chains on the x4 fact,
+# The shuffle-heaviest registered queries (VERDICT r9 plan audit):
+# TPC-H heavy aggregation/join chains on the x4 fact,
 # the LSH band self-join and df-pruned postings self-join on the x16
 # corpus, the hash-dedup groupBy, and the heaviest window/session shapes
 # on the x4 timeline. The first ten are the round-10 core sweep (VERDICT
