@@ -3,19 +3,22 @@ metadata, processed with Arrow-batched pandas UDFs (``mapInPandas``).
 
 The heavyweight decoders (PIL/tifffile/librosa/ffmpeg) are not in this
 container, mirroring the reference's optional ``pims`` dependency
-(``dask_image/imread/__init__.py`` imports pims lazily). FIVE formats are
-nonetheless REAL, written from scratch on the stdlib: PGM, PNG, baseline
-TIFF (images), 16-bit PCM WAV (audio), and Y4M/YUV4MPEG2 (video — raw
-planar frames, so container parsing needs no codec) — full encode ->
-file -> scan -> decode roundtrips covering all three modalities. Only the
-generic ``decode_image`` catch-all stays STUBBED (raises unless given the
-deterministic fake codec), while all the Spark-side plumbing — schema,
-Arrow batching, partition-parallel fan-out, UDF signatures — is real and
-tested. Swapping the stub for PIL/ffmpeg is a one-function change.
+(``dask_image/imread/__init__.py`` imports pims lazily). The codecs here
+are REAL nonetheless, written from scratch on the stdlib: PGM (P5 and
+ASCII P2), PPM (P6), PNG (grayscale and truecolor), TIFF (baseline,
+DEFLATE, LZW, PackBits, 16-bit with predictor, multi-page), BMP and GIF
+images, 16-bit PCM WAV audio, and Y4M/YUV4MPEG2 video (raw planar
+frames, so container parsing needs no codec); baseline JPEG lives in
+``operators/jpeg.py``. The imread/audio/video queries call them directly
+through one encode -> file -> scan -> decode round trip
+(``queries/pipeline.py::_codec_roundtrip``).
 
-The deterministic fake treats the payload bytes themselves as the "pixels":
-metadata (byte length, first byte, byte-sum checksum) is computable by the
-DuckDB oracle too, so even the UDF plumbing gets a strong correctness check.
+``image_meta``, ``resize_stride`` and ``frame_sample`` instead run on the
+deterministic fake codec ``decode_image``, which treats the payload bytes
+themselves as the "pixels": metadata (byte length, first byte, byte-sum
+checksum) is computable by the DuckDB oracle too, so even the UDF
+plumbing — schema, Arrow batching, partition-parallel fan-out — gets a
+strong correctness check.
 """
 
 from __future__ import annotations
@@ -742,29 +745,10 @@ def decode_y4m(payload: bytes) -> tuple[int, int, int, list[bytes]]:
     return width, height, fps or 0, frames
 
 
-def decode_image(payload: bytes, codec: str = "fake"):
-    """Decode an image payload to an array.
-
-    ``fake``: the deterministic byte-passthrough used to strong-check the
-    UDF plumbing. ``pgm``: a REAL pure-python netpbm decoder (see
-    :func:`decode_pgm`) — proof the one-function codec swap claim holds.
-    PIL/tifffile codecs raise until the libraries exist in the runtime."""
-    if codec == "fake":
-        return list(payload)
-    if codec == "pgm":
-        return decode_pgm(payload)[2]
-    if codec == "png":
-        return decode_png(payload)[2]
-    if codec == "tiff":
-        return decode_tiff(payload)[2]
-    if codec == "jpeg":
-        from dask_image_spark.operators.jpeg import decode_jpeg_gray
-
-        return decode_jpeg_gray(payload)[2]
-    raise NotImplementedError(
-        f"codec {codec!r} needs an image library not present in this "
-        "container; install PIL/tifffile and extend decode_image"
-    )
+def decode_image(payload: bytes):
+    """The deterministic fake codec: the payload bytes themselves are the
+    pixels, so the SQL oracle can recompute every statistic."""
+    return list(payload)
 
 
 def with_binary_payload(df: DataFrame, text_col: str = "text") -> DataFrame:

@@ -20,7 +20,7 @@ from dask_image_spark.operators.salted import salted_pair_join
 from dask_image_spark.queries.base import r as _eps_round, register
 from dask_image_spark.sources.tables import load_table
 from dask_image_spark.functions.localrel import values_df
-from dask_image_spark.scratch import io_base
+from dask_image_spark.scratch import fresh_dir, io_base
 
 
 def _r(col, n=4):
@@ -4479,18 +4479,14 @@ def custom_python_datasink(spark, sf_dir):
     format achieves exactly-once under task retries; at scale the
     manifest write is the only driver-side step and is O(tasks)."""
     import json
-    import os
 
-    from dask_image_spark.queries.pipeline import _fresh_dir
     from dask_image_spark.sources.pyds import (
         read_manifest_files,
         register_ndjson_manifest,
     )
 
     register_ndjson_manifest(spark)
-    tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    out = f"{io_base()}/pyds_sink_{tag}"
-    _fresh_dir(out)
+    out = fresh_dir("pyds_sink", sf_dir)
 
     ev = load_table(spark, sf_dir, "events").filter(F.col("event_id") < 5000)
     (
@@ -4664,13 +4660,7 @@ def nested_schema_pruning(spark, sf_dir):
     plus ``size()`` — no explode, no shuffle after the scan; the oracle
     replays the same numbers from the flat lineitem table, proving the
     nest -> write -> prune -> fold pipeline loses nothing."""
-    import os
-
-    from dask_image_spark.queries.pipeline import _fresh_dir
-
-    tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    out = f"{io_base()}/nested_{tag}"
-    _fresh_dir(out)
+    out = fresh_dir("nested", sf_dir)
 
     li = load_table(spark, sf_dir, "lineitem")
     nested = li.groupBy("l_orderkey").agg(
@@ -4728,13 +4718,7 @@ def json_corrupt_records(spark, sf_dir):
     class routes to a quarantine sink for replay (FAILFAST/DROPMALFORMED
     are the other two modes; PERMISSIVE + DLQ is the production
     default)."""
-    import os
-
-    from dask_image_spark.queries.pipeline import _fresh_dir
-
-    tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    land = f"{io_base()}/corrupt_land_{tag}"
-    _fresh_dir(land)
+    land = fresh_dir("corrupt_land", sf_dir)
 
     ev = load_table(spark, sf_dir, "events")
     line = F.to_json(F.struct("event_id", "event_type", "value"))
@@ -5053,13 +5037,7 @@ def scan_ignore_corrupt_files(spark, sf_dir):
     option here, not a session conf) the counts break. Together the two
     queries grade the ingest fault matrix: bad rows routed, bad files
     skipped, both hash-checked."""
-    import os
-
-    from dask_image_spark.queries.pipeline import _fresh_dir
-
-    tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    land = f"{io_base()}/corrupt_files_{tag}"
-    _fresh_dir(land)
+    land = fresh_dir("corrupt_files", sf_dir)
 
     ev = load_table(spark, sf_dir, "events").filter(F.col("event_id") < 4000)
     (

@@ -19,7 +19,22 @@ rather than a literal:
 from __future__ import annotations
 
 import os
+import shutil
 
 
 def io_base() -> str:
     return os.environ.get("SPARK_GRAFT_IO_DIR", "/tmp/dask_image_spark_io")
+
+
+def fresh_dir(name: str, sf_dir: str) -> str:
+    """Reset and return the landing directory ``io_base()/<name>_<sf tag>``.
+
+    Files written by a prior run over since-regenerated data would
+    otherwise be read back with the new ones and break the oracle match
+    (ADVICE r5), so every io-write landing directory starts empty. The
+    ``sf`` tag keeps runs over different scale factors apart."""
+    tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
+    path = f"{io_base()}/{name}_{tag}"
+    shutil.rmtree(path, ignore_errors=True)
+    os.makedirs(path, exist_ok=True)
+    return path
