@@ -26,8 +26,9 @@ MODES = ("reflect", "mirror", "nearest", "wrap", "constant")
 
 
 def remap_py(c: int, n: int, mode: str) -> int:
-    """Python mirror of :func:`remap_sql` — used to build the tiny pad-map
-    tables for the pad-then-scatter stencil plan (same single-bounce domain)."""
+    """Python mirror of :func:`remap_sql` — used to build the (src, pad)
+    pairs of the pad-then-scatter stencil's per-axis explode (same
+    single-bounce domain)."""
     if mode == "reflect":
         return -c - 1 if c < 0 else (2 * n - 1 - c if c >= n else c)
     if mode == "mirror":

@@ -5,7 +5,7 @@ Python-RDD serialization — ~0.4 s of fixed overhead per call on this
 machine, paid at *query construction* time. A ``VALUES`` clause is parsed
 JVM-side into a LocalRelation: instant to build, trivially broadcast, and
 Catalyst constant-folds through it. Every driver-side literal table in the
-engine (kernels, pad maps, band tables, stopword lists) goes through here.
+engine (kernels, band tables, stopword lists) goes through here.
 """
 
 from __future__ import annotations

@@ -30,10 +30,10 @@ BLOCK = 16  # label block size -> 16 labels 0..15
 def pixel_grid(spark: SparkSession, sf_dir: str, grid: int = GRID) -> DataFrame:
     """Dense (y, x, value) pixel table derived from events.
 
-    Persisted (session-tracked): stencil plans reference the pixel table
-    from several union branches (body + halo borders); for a parquet-backed
-    pixel table each branch is a pruned scan, but this *derived* fixture
-    would re-run the events aggregation per branch. The persist is deduped
+    Persisted (session-tracked): many queries reference the pixel table
+    more than once (a filter joined back to its input, as in the tophats
+    and ``threshold_local``), and this *derived* fixture would re-run the
+    events aggregation per reference. The persist is deduped
     by Spark's CacheManager on the canonicalized plan, so repeated calls
     share one entry (grid is ~4k rows — negligible memory), and registering
     through ``persist_tracked`` (instead of a bare ``cache()``) lets

@@ -103,13 +103,11 @@ def spline_filter1d(
     along the filtered axis, run the per-order IIR cascade per line.
 
     The result is persisted (session-tracked): spline coefficients are
-    consumed by stencil/gather plans that reference their input from
-    several union branches (mirror-pad body + halo borders, corner
-    fan-outs), and an unmaterialized Arrow stage would be RE-EXECUTED once
-    per branch — chaining two mirror correlates over an uncached
-    coefficient frame recomputes the IIR ~4^depth times (measured
-    15 s → 3 s on the ``spline_filter`` reconstruction identity at fixture
-    scale). Materializing the coefficient array once per axis pass is
+    consumed by gather plans that fan every output pixel out to its
+    (order+1)^2 coefficient corners (``ndinterp.affine_transform_spline``)
+    and by the mirror correlates of the reconstruction identity, and an
+    unmaterialized Arrow stage would re-run the per-line Python IIR inside
+    each of them. Materializing the coefficient array once per axis pass is
     exactly the chunk materialization dask-image performs; memory is
     bounded by the image, which is already this operator's per-group
     contract. Spark's CacheManager dedupes on the canonicalized plan, so
@@ -179,11 +177,11 @@ def map_overlap_tiles(
 ) -> DataFrame:
     """The R2 fast path: dask's ``map_overlap`` re-expressed on Spark.
 
-    1. Boundary-pad the pixel table (broadcast pad-maps, same semantics as
-       the R1 stencils — ``ndfilters.padded_pixels``).
+    1. Boundary-pad the pixel table (one explode per axis, same semantics
+       as the R1 stencils — ``ndfilters.padded_pixels``).
     2. Replicate each padded pixel to every tile whose halo region contains
-       it (a broadcast join against the 9 tile-offset directions, then a
-       range filter — pixels land in 1 tile interior + up to 3 halos).
+       it (one explode of the 1-2 tile indices per axis — pixels land in 1
+       tile interior + up to 3 halos).
     3. ``applyInPandas`` per (block+2*depth)^2 tile: assemble the dense
        numpy tile, run ``tile_fn`` (any local operator with radius <=
        depth), emit the interior.

@@ -6,7 +6,7 @@ its arguments then runs ``image.map_overlap(scipy_fn, depth, boundary)`` —
 a halo exchange plus a per-chunk scipy call, for arrays of any rank. The
 Spark-first equivalent for long-form pixels is **pad-then-scatter**:
 
-    padded  = pixels UNION (edge pixels x broadcast pad-maps)  -- no shuffle;
+    padded  = pixels exploded into their pad copies, per axis  -- no shuffle;
               border replication is O(surface * radius), dask's halo
     scatter = padded CROSS JOIN broadcast(kernel offsets)      -- no shuffle
               target coord = padded coord - offset, filter in-bounds
@@ -14,14 +14,14 @@ Spark-first equivalent for long-form pixels is **pad-then-scatter**:
 
 One template serves every rank: a rank-N image has the coordinate columns
 :func:`axis_names` (N) and its kernel offsets are ``(d_0, ..., d_{N-1}, w)``.
-Physical plan: pad-maps and kernels are tens of rows, always broadcast; the
-border branches carry a pushable edge predicate so their scans prune to edge
-row-groups. The only exchange in the whole stencil is the final aggregate,
-and map-side partial aggregation applies to SUM/MIN/MAX/AVG. (A gather
-formulation — join the fanned-out neighbor coords back against the pixel
-table — shuffles the kernel-times-fanned side AND the probe side; scatter
-moves the same fan-out through exactly one shuffle, which is the difference
-at 100 TB.) Separable filters (Gaussian, uniform, prewitt/sobel) are applied
+Physical plan: the padding is one Generate per padded axis over a single
+scan of the pixel table, and the kernel fan-out is a literal-array inline;
+neither joins nor unions. The only exchange in the whole stencil is the
+final aggregate, and map-side partial aggregation applies to
+SUM/MIN/MAX/AVG. (A gather formulation — join the fanned-out neighbor
+coords back against the pixel table — shuffles the kernel-times-fanned
+side AND the probe side; scatter moves the same fan-out through exactly
+one shuffle, which is the difference at 100 TB.) Separable filters (Gaussian, uniform, prewitt/sobel) are applied
 as per-axis 1-D passes exactly like the reference; each pass pads only the
 axis it filters.
 
@@ -32,7 +32,6 @@ DuckDB oracle and this engine cannot disagree on edge semantics.
 from __future__ import annotations
 
 import functools
-import itertools
 import operator
 from collections.abc import Sequence
 
@@ -78,23 +77,19 @@ def _pad_pairs(n: int, r: int, mode: str) -> list[tuple[int, int]]:
     return [(remap_py(c, n, mode), c) for c in coords]
 
 
-def _pad_map(spark, pairs: list[tuple[int, int]]) -> DataFrame:
-    rows = ", ".join(f"({s}, {p})" for s, p in pairs)
-    return spark.sql(f"SELECT * FROM VALUES {rows} AS t(src, pad)")
-
-
-def _edge_pred(pairs: list[tuple[int, int]], col: str):
-    """Predicate selecting exactly the rows the pad map can source. NOT
-    simply ``coord < r``: mirror's sources are coords 1..r (coordinate 0 is
-    the symmetry axis and never replicated), wrap's are the opposite edge."""
-    lows = [s for s, p in pairs if p < 0]
-    highs = [s for s, p in pairs if p >= 0]
-    pred = F.lit(False)
-    if lows:
-        pred = pred | ((F.col(col) >= min(lows)) & (F.col(col) <= max(lows)))
-    if highs:
-        pred = pred | ((F.col(col) >= min(highs)) & (F.col(col) <= max(highs)))
-    return pred
+def _pad_explode(c: str, pairs: list[tuple[int, int]]) -> Column:
+    """One padded axis as a generator: each source coordinate ``s`` emits
+    itself plus every pad coordinate that reads it, any other coordinate
+    emits only itself. A source can feed several pads (nearest's edge
+    feeds all r of them; reflect/wrap at r >= n/2 feed both sides)."""
+    pads: dict[int, list[int]] = {}
+    for s, p in pairs:
+        pads.setdefault(s, []).append(p)
+    arms = " ".join(
+        f"WHEN {s} THEN array({c}, {', '.join(map(str, ps))})"
+        for s, ps in sorted(pads.items())
+    )
+    return F.expr(f"explode(CASE {c} {arms} ELSE array({c}) END)").alias(c)
 
 
 def padded_pixels(
@@ -109,11 +104,13 @@ def padded_pixels(
     """Pixels extended to the halo box [-r_i, n_i + r_i) on every axis i;
     returns ``*keys, *coords, _pv``. Axes with radius 0 are not padded.
 
-    Non-constant modes: one branch per non-empty subset of the padded axes
-    (2^N - 1; at rank 2 the y-edge, x-edge and corner branches). Each
-    branch copies the edge pixels its subset's broadcast pad-maps can
-    source (the Spark analog of dask's halo exchange) and carries a
-    pushable edge predicate per axis, so its scan prunes to the edges.
+    Non-constant modes: one projection per padded axis that explodes each
+    pixel into itself plus the pad coordinates it sources on that axis
+    (:func:`_pad_explode`; the Spark analog of dask's halo exchange). A pad
+    position reads exactly one source per axis, independently, so the
+    chained explodes emit the per-axis product: corners come out of the
+    second axis exploding the first axis's pad rows. One scan, no join, no
+    union, no shuffle.
     Constant mode: ``cval`` strips built from ``spark.range`` cross joins —
     coordinate generation only, no data scan, O(surface * radius) rows.
     """
@@ -152,25 +149,12 @@ def padded_pixels(
             strips = px.select(*keys).distinct().crossJoin(strips)
         return body.unionByName(strips.select(*keys, *coords, fill))
 
-    pairs = {i: _pad_pairs(shape[i], radii[i], mode) for i in axes}
     out = body
-    for subset_size in range(1, len(axes) + 1):
-        for subset in itertools.combinations(axes, subset_size):
-            branch = body
-            for i in subset:
-                branch = branch.filter(_edge_pred(pairs[i], coords[i]))
-            for i in subset:
-                pm = F.broadcast(
-                    _pad_map(spark, pairs[i]).withColumnsRenamed(
-                        {"src": f"_s{i}", "pad": f"_p{i}"}
-                    )
-                )
-                branch = branch.join(pm, F.col(coords[i]) == F.col(f"_s{i}"))
-            sel = [
-                (F.col(f"_p{i}").alias(c) if i in subset else F.col(c))
-                for i, c in enumerate(coords)
-            ]
-            out = out.unionByName(branch.select(*keys, *sel, "_pv"))
+    for i in axes:
+        pad_i = _pad_explode(coords[i], _pad_pairs(shape[i], radii[i], mode))
+        out = out.select(
+            *keys, *(pad_i if j == i else c for j, c in enumerate(coords)), "_pv"
+        )
     return out
 
 
@@ -368,8 +352,8 @@ def gaussian_filter(
     for axis in (0, 1):
         taps = K.gaussian_taps_1d(sigmas[axis], orders[axis], truncate)
         # NOTE (chained-stencil recompute rule, SCALE.md imaging section):
-        # pass 2's non-constant padding references pass 1 from the body and
-        # edge union branches. An operator-internal cache() here was
+        # pass 2's non-constant padding reads pass 1 once (one scan under
+        # the per-axis explode). An operator-internal cache() here was
         # measured a NET LOSS across the suite: it costs ~0.3 s of fixed
         # materialization on every single-reference consumer (edge_canny
         # 2.18 -> 2.50 s) and only pays when the CALLER re-references the
@@ -387,7 +371,9 @@ def gaussian_gradient_magnitude(px, sigma, shape=None, mode="reflect", cval=0.0,
     """sqrt(sum_i d_i^2) with d_i the order-1 Gaussian along axis i."""
     gy = gaussian_filter(px, sigma, (1, 0), shape, mode, cval, truncate, keys)
     gx = gaussian_filter(px, sigma, (0, 1), shape, mode, cval, truncate, keys)
-    j = gy.withColumnRenamed("v", "gy").join(
+    # Both sides are image-scale and explode-derived (the per-axis pad), so
+    # the planner's Generate-blind estimate may broadcast one: pin the join.
+    j = gy.withColumnRenamed("v", "gy").hint("merge").join(
         gx.withColumnRenamed("v", "gx"), on=[*keys, "y", "x"]
     )
     return j.select(
@@ -400,7 +386,9 @@ def gaussian_laplace(px, sigma, shape=None, mode="reflect", cval=0.0, truncate=4
     """Sum of per-axis order-2 Gaussian responses."""
     dyy = gaussian_filter(px, sigma, (2, 0), shape, mode, cval, truncate, keys)
     dxx = gaussian_filter(px, sigma, (0, 2), shape, mode, cval, truncate, keys)
-    j = dyy.withColumnRenamed("v", "dyy").join(
+    # Both sides are image-scale and explode-derived (the per-axis pad), so
+    # the planner's Generate-blind estimate may broadcast one: pin the join.
+    j = dyy.withColumnRenamed("v", "dyy").hint("merge").join(
         dxx.withColumnRenamed("v", "dxx"), on=[*keys, "y", "x"]
     )
     return j.select(*keys, "y", "x", (F.col("dyy") + F.col("dxx")).alias("v"))
@@ -435,7 +423,11 @@ def threshold_local(
         sm = gaussian_filter(px, s, 0, shape, mode, cval, keys=keys)
     else:
         raise ValueError(f"unknown method {method!r}")
-    j = px.join(sm.withColumnRenamed("v", "smoothed"), on=[*keys, "y", "x"])
+    # The smoothed side is image-scale and explode-derived (the per-axis
+    # pad), so the planner's Generate-blind estimate may broadcast it: pin.
+    j = px.hint("merge").join(
+        sm.withColumnRenamed("v", "smoothed"), on=[*keys, "y", "x"]
+    )
     return j.select(
         *keys, "y", "x",
         (F.col("value") > F.col("smoothed") - F.lit(offset)).alias("v"),

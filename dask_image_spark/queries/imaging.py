@@ -718,7 +718,8 @@ def morph_tophat_white(spark, sf_dir):
     opened = ndfilters.maximum_filter(
         _as_value(ndfilters.minimum_filter(px, 3, SHAPE)), 3, SHAPE
     ).select("y", "x", F.col("v").alias("vo"))
-    return px.join(opened, ["y", "x"]).select(
+    # image-scale explode-derived side: pin, never broadcast
+    return px.hint("merge").join(opened, ["y", "x"]).select(
         "y", "x", _eps_round(F.col("value") - F.col("vo"), 4).alias("v")
     )
 
@@ -733,7 +734,8 @@ def morph_tophat_black(spark, sf_dir):
     closed = ndfilters.minimum_filter(
         _as_value(ndfilters.maximum_filter(px, 3, SHAPE)), 3, SHAPE
     ).select("y", "x", F.col("v").alias("vc"))
-    return px.join(closed, ["y", "x"]).select(
+    # image-scale explode-derived side: pin, never broadcast
+    return px.hint("merge").join(closed, ["y", "x"]).select(
         "y", "x", _eps_round(F.col("vc") - F.col("value"), 4).alias("v")
     )
 
@@ -957,8 +959,8 @@ def filter_laplace_4d(spark, sf_dir):
     8-neighbor Laplacian over an 8^4 (t, z, y, x) hypervolume, the shape
     of a (time, depth, height, width) microscopy sequence, through the
     SAME rank-generic ``correlate`` pad-scatter plan as the 3-D query
-    (boundary branches are the 2^N - 1 axis subsets; N only changes how
-    many broadcast pad-map joins feed the one shuffle). Upstream accepts
+    (the halo is one explode per padded axis; N only changes how many
+    chained explodes feed the one shuffle). Upstream accepts
     any-rank dask arrays; this grades ours at the rank where hand-rolled
     2-D/3-D specializations would have run out."""
     ev = load_table(spark, sf_dir, "events")
@@ -2185,11 +2187,9 @@ def quickstart_pipeline(spark, sf_dir):
     )
     # Chained-stencil recompute rule (SCALE.md imaging section): sm is
     # referenced THREE times below (mean, mask, intensity join), and each
-    # reference re-executes the two-pass stencil whose own mirror padding
-    # already fans pass 1 out across 4 union branches — ~12 evaluations
-    # of the smooth for one query. Materializing once (the dask chunk
-    # analog; released by release_caches) measured the non-eager part of
-    # this query 2.61 s -> 0.62 s warm.
+    # reference re-executes the two-pass stencil. Materializing once (the
+    # dask chunk analog; released by release_caches) measured the
+    # non-eager part of this query 2.61 s -> 0.62 s warm.
     sm = persist_tracked(sm)
     mu = sm.agg(_eps_round(F.avg("v"), 6).alias("m"))
     masked = sm.crossJoin(F.broadcast(mu)).select(
@@ -3809,8 +3809,9 @@ def blob_dog_maxima(spark, sf_dir):
         F.col("y").alias("ny"), F.col("x").alias("nx"),
         F.col("v").alias("nv"),
     )
+    # both sides image-scale and explode-derived: pin, never broadcast
     return (
-        probes.join(nb, ["ny", "nx"])
+        probes.hint("merge").join(nb, ["ny", "nx"])
         .filter(F.col("y").between(1, 62) & F.col("x").between(1, 62))
         .groupBy("y", "x", "v")
         .agg(F.max("nv").alias("mx"))

@@ -28,11 +28,7 @@ from dask_image_spark.operators import (
     ndmorph,
 )
 from dask_image_spark.functions.localrel import values_df
-from dask_image_spark.queries.base import (
-    persist_tracked,
-    r as _eps_round,
-    register,
-)
+from dask_image_spark.queries.base import r as _eps_round, register
 from dask_image_spark.sources.tables import load_table
 
 SHAPE = (GRID, GRID)
@@ -516,12 +512,6 @@ def spline_filter_q(spark, sf_dir):
     rec = ndfilters.correlate(
         c.withColumnRenamed("v", "value"), _B3_Y, SHAPE, mode="mirror"
     )
-    # Persist between the two reconstruction passes: the second mirror
-    # correlate references its input from body + halo union branches, so
-    # an unpersisted first pass would be re-executed once per branch
-    # (measured 14 s -> ~4 s at fixture scale; the same reason
-    # spline_filter1d caches its coefficient output).
-    rec = persist_tracked(rec)
     rec = ndfilters.correlate(
         rec.withColumnRenamed("v", "value"), _B3_X, SHAPE, mode="mirror"
     )

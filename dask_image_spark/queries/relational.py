@@ -168,7 +168,8 @@ def scan_binaryfile(spark, sf_dir):
         )
     df = (
         spark.read.format("binaryFile")
-        .load(f"{sf_dir}/*.parquet")
+        .option("pathGlobFilter", "*.parquet")
+        .load(sf_dir)
         .select(
             F.regexp_extract("path", "([^/]+)$", 1).alias("file_name"),
             F.col("length").alias("n_bytes"),

@@ -141,8 +141,8 @@ def test_affine_order3_broadcasts_corner_fanout(spark, sf_dir):
 
 def test_stencil_is_single_shuffle(spark, sf_dir):
     """The pad-then-scatter stencil: exactly one aggregate exchange over the
-    fan-out; borders come from broadcasts. (InMemoryTableScan branches from
-    the cached fixture grid don't shuffle.)"""
+    fan-out. The halo is a per-axis explode over one scan of the pixels, so
+    the plan has no Union branch and no broadcast join at all."""
     from dask_image_spark.functions.localrel import values_df
     from dask_image_spark.operators import ndfilters
     from dask_image_spark.functions import kernels as K
@@ -161,6 +161,8 @@ def test_stencil_is_single_shuffle(spark, sf_dir):
         and "ReusedExchange" not in line
     )
     assert n_shuffle == 1, f"stencil should shuffle once, got {n_shuffle}:\n{tree}"
+    for node in ("Union", "BroadcastHashJoin", "BroadcastExchange"):
+        assert node not in tree, f"stencil plan has a {node}:\n{tree}"
 
 
 def test_sample_stratified_is_pushdown_filter_no_shuffle(spark, sf_dir):
@@ -675,9 +677,8 @@ def test_grey_morphology_single_shuffle_per_pass(spark, sf_dir):
     tree = plan.split("\n\n")[0]
     # NOTE: no raw Exchange count here — when the pixel fixture is already
     # cached (full-suite order), InMemoryRelation prints its STORED plan
-    # including its internal Exchanges, inflating any text count. The
-    # broadcast pad-map joins that build the halo ARE expected; what the
-    # single-shuffle posture forbids is any data-data shuffle join:
+    # including its internal Exchanges, inflating any text count. What
+    # the single-shuffle posture forbids is any data-data shuffle join:
     for bad in ("SortMergeJoin", "ShuffledHashJoin", "CartesianProduct"):
         assert bad not in tree, tree[:2000]
     assert "HashAggregate" in tree, tree[:2000]

@@ -143,44 +143,57 @@ def test_binary_erosion_dilation_duality(spark):
 
 
 @pytest.mark.parametrize(
-    "rank, mode",
+    "rank, mode, n_img",
     [
-        pytest.param(3, "reflect", id="reflect"),
-        pytest.param(3, "wrap", id="wrap"),
-        pytest.param(3, "nearest", id="nearest"),
-        pytest.param(3, "constant", id="constant"),
-        pytest.param(4, "reflect", id="4d-reflect"),
-        pytest.param(4, "constant", id="4d-constant"),
+        pytest.param(3, "reflect", 0, id="reflect"),
+        pytest.param(3, "wrap", 0, id="wrap"),
+        pytest.param(3, "nearest", 0, id="nearest"),
+        pytest.param(3, "constant", 0, id="constant"),
+        pytest.param(4, "reflect", 0, id="4d-reflect"),
+        pytest.param(4, "constant", 0, id="4d-constant"),
+        *(
+            pytest.param(2, m, 2, id=f"keyed-{m}")
+            for m in ("reflect", "mirror", "nearest", "wrap")
+        ),
     ],
 )
-def test_correlate_nd_3d_matches_numpy(spark, rank, mode):
-    """Rank-3 and rank-4 differential: the rank-generic ``correlate`` vs
-    dense numpy padding (constant mode with nonzero cval covers the N
-    disjoint constant pad strips)."""
-    D = 6 if rank == 3 else 4
+def test_correlate_nd_3d_matches_numpy(spark, rank, mode, n_img):
+    """Rank-2, rank-3 and rank-4 differential: the rank-generic
+    ``correlate`` vs dense numpy padding (constant mode with nonzero cval
+    covers the N disjoint constant pad strips). ``n_img`` > 0 stacks that
+    many different images under an ``img`` key, so the per-axis pad runs
+    with ``keys`` and must keep every image's halo to its own pixels."""
+    D = {2: 6, 3: 6, 4: 4}[rank]
     rng = np.random.default_rng(5)
-    vol = np.round(rng.uniform(-2, 2, size=(D,) * rank), 3)
+    vols = np.round(rng.uniform(-2, 2, size=(max(n_img, 1),) + (D,) * rank), 3)
     coords = ndfilters.axis_names(rank)
-    rows = [(*map(int, idx), float(vol[idx])) for idx in np.ndindex(vol.shape)]
-    px = values_df(spark, ", ".join([*coords, "value"]), rows)
+    keys = ["img"] if n_img else []
+    rows = [
+        (*((i,) if n_img else ()), *map(int, idx), float(vols[i][idx]))
+        for i in range(len(vols)) for idx in np.ndindex(vols[i].shape)
+    ]
+    px = values_df(spark, ", ".join([*keys, *coords, "value"]), rows)
     k = [(0,) * rank + (-2.0 * rank,)]
     for axis in range(rank):
         for d in (-1, 1):
             off = [0] * rank
             off[axis] = d
             k.append((*off, 1.0))
-    got = np.full(vol.shape, np.nan)
-    res = ndfilters.correlate(px, k, vol.shape, mode=mode, cval=1.25)
+    got = np.full(vols.shape, np.nan)
+    res = ndfilters.correlate(
+        px, k, (D,) * rank, mode=mode, cval=1.25, keys=keys
+    )
     for r in res.collect():
-        got[tuple(r[c] for c in coords)] = r["v"]
-    if mode == "constant":
-        pad = np.pad(vol, 1, mode="constant", constant_values=1.25)
-    else:
-        pad = np.pad(vol, 1, mode=NP_PAD_MODE[mode])
-    want = np.zeros_like(vol)
-    for *off, w in k:
-        want += w * pad[tuple(slice(1 + d, 1 + d + D) for d in off)]
-    np.testing.assert_allclose(got, want, rtol=1e-9, atol=1e-9)
+        got[(r["img"] if n_img else 0, *(r[c] for c in coords))] = r["v"]
+    for vol, got_vol in zip(vols, got):
+        if mode == "constant":
+            pad = np.pad(vol, 1, mode="constant", constant_values=1.25)
+        else:
+            pad = np.pad(vol, 1, mode=NP_PAD_MODE[mode])
+        want = np.zeros_like(vol)
+        for *off, w in k:
+            want += w * pad[tuple(slice(1 + d, 1 + d + D) for d in off)]
+        np.testing.assert_allclose(got_vol, want, rtol=1e-9, atol=1e-9)
 
 
 def test_separable_pass_pads_only_its_axis(spark, monkeypatch):
