@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from dask_image_spark.caching import persist_tracked
+from dask_image_spark.operators.label_cc import prelabel_partitions
 from dask_image_spark.operators.ndfilters import axis_names, padded_pixels
 
 _CUBIC_POLE = math.sqrt(3.0) - 2.0
@@ -190,6 +191,20 @@ def map_overlap_tiles(
     tile — exactly dask's halo exchange. Use when per-chunk numpy beats the
     per-pixel relational form (large kernels, chained scipy-style ops).
     ``tile_fn(tile: np.ndarray) -> np.ndarray`` must be shape-preserving.
+
+    Without ``keys`` the exchange is an explicit hash repartition on
+    (tty, ttx) into one partition per tile (capped by
+    ``label_cc.prelabel_partitions``, the rule label's pre-label exchange
+    uses): the stage is Python CPU per tile, so it runs one task per tile
+    instead of whatever AQE's byte-based coalescing packs the few tile
+    groups into, and the output — and every reader of a persisted copy,
+    which keeps the plan's partition count — has exactly that many
+    partitions rather than ``spark.sql.shuffle.partitions``. Hash placement
+    is not a bijection: a 2x2 grid lands in 4 distinct partitions, but at
+    larger grids some partitions hold two or more tiles and others none
+    (16 tiles: 10 non-empty partitions, at most 4 tiles in one). With
+    ``keys`` the group count is unknown without a job, so the keyed
+    exchange stays the planner's ``applyInPandas`` shuffle.
     """
     h, w = shape
     keys = list(keys)
@@ -226,6 +241,11 @@ def map_overlap_tiles(
         .withColumn("ttx", _tile_range("x", ntx))
         .select(*keys, "tty", "ttx", "y", "x", "_pv")
     )
+
+    if not keys:
+        asg = asg.repartition(
+            prelabel_partitions(px.sparkSession, nty * ntx), "tty", "ttx"
+        )
 
     schema = ", ".join([*(f"{k} long" for k in keys), "y int", "x int", "v double"])
 

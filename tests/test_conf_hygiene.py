@@ -98,3 +98,28 @@ def test_release_caches_leaves_no_tracked_storage(spark):
     assert not (after - before), (
         f"release_caches() left tracked entries in storage: {after - before}"
     )
+
+
+def test_release_caches_frees_label_checkpoint(spark):
+    """label()'s local checkpoint of its pre-labelled rows is registered
+    with caching, so release_caches() frees it rather than leaving one RDD
+    per call in storage until the driver's GC finds it. Delta-based, in
+    the style of the test above. The mask's components cross blocks, so
+    the driver merge path runs."""
+    from dask_image_spark import queries as q
+    from dask_image_spark.functions.localrel import values_df
+    from dask_image_spark.operators.label_cc import label
+
+    q.release_caches()
+    before = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+    rows = [(y, x, (x + y) % 3 != 0) for y in range(8) for x in range(8)]
+    lab = label(values_df(spark, "y, x, m", rows), (8, 8), block=4)
+    assert lab.count() == sum(m for _, _, m in rows)
+    during = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+    assert during - before, "expected label's checkpoint in storage"
+
+    q.release_caches()
+    after = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+    assert not (after - before), (
+        f"release_caches() left label's checkpoint in storage: {after - before}"
+    )

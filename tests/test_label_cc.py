@@ -340,3 +340,147 @@ def test_tile_assignment_matches_nine_direction_reference(spark):
                     for tx in range(lo_x, hi_x + 1)
                 }
                 assert got == ref, (block, depth, y, x)
+
+
+def _halfedge_rows(mask: np.ndarray, block: int, fwd) -> tuple:
+    """Stage 1 run block by block on the driver: the (ck, l) half-edge
+    rows label() emits for ``mask``."""
+    h, w = mask.shape
+    cks, ls = [], []
+    for by in range(0, h, block):
+        for bx in range(0, w, block):
+            ys, xs = np.nonzero(mask[by:by + block, bx:bx + block])
+            if ys.size == 0:
+                continue
+            a, lbl = label_cc._block_rows(ys + by, xs + bx, w, block, fwd)
+            half = a < 0
+            cks.append(-a[half] - 1)
+            ls.append(lbl[half])
+    return np.concatenate(cks), np.concatenate(ls)
+
+
+@pytest.mark.parametrize("structure", [None, np.ones((3, 3))],
+                         ids=["4conn", "8conn"])
+def test_pair_halfedges_matches_groupby_pairing(spark, structure):
+    """The driver-side numpy pairing yields exactly the pair rows of the
+    contact-key groupBy it replaces — groupBy(ck).agg(min, max).filter(min
+    != max) — on the same half-edge rows, including single-emission keys
+    (no edge), every row emitted twice (duplicate emissions) and the
+    diagonal contact keys of the 3x3 structure."""
+    import pyarrow as pa
+    from pyspark.sql import functions as F
+
+    rng = np.random.default_rng(7)
+    mask = rng.random((24, 24)) < 0.5
+    fwd = label_cc.forward_offsets(structure)
+    ck, lv = _halfedge_rows(mask, 4, fwd)
+    _, counts = np.unique(ck, return_counts=True)
+    assert (counts == 1).any() and (counts == 2).any()
+    ck2, lv2 = np.concatenate([ck, ck]), np.concatenate([lv, lv])
+
+    def pairs(c, v):
+        return sorted(zip(*(a.tolist() for a in label_cc.pair_halfedges(c, v))))
+
+    rows = spark.createDataFrame(pa.table({"ck": ck2, "l": lv2}))
+    old = (
+        rows.groupBy("ck")
+        .agg(F.min("l").alias("lo"), F.max("l").alias("hi"))
+        .filter(F.col("lo") != F.col("hi"))
+        .collect()
+    )
+    assert pairs(ck2, lv2) == sorted((r["lo"], r["hi"]) for r in old)
+    # one pair per pairing key: the doubled rows add none
+    assert pairs(ck, lv) == pairs(ck2, lv2)
+    # every offset pairs something — for 3x3, both diagonals too
+    assert {r["ck"] % len(fwd) for r in old} == set(range(len(fwd)))
+    lo, hi = label_cc.pair_halfedges(np.empty(0), np.empty(0))
+    assert lo.size == hi.size == 0
+
+
+def test_label_driver_merge_many_fragments_matches_bfs(spark, monkeypatch):
+    """Stage 3 at a real fragment count: a 45%-density noise mask at
+    block=4 gives a fragment graph of ~1,800 cross-block fragments, which
+    the driver merge (min_label_roots, the per-block loop) must settle to
+    the BFS reference."""
+    import pandas as pd
+
+    seen = []
+    real = label_cc.min_label_roots
+
+    def spy(n, eu, ev):
+        seen.append(n)
+        return real(n, eu, ev)
+
+    h = w = 128
+    mask = np.random.default_rng(3).random((h, w)) < 0.45
+    ys, xs = np.indices(mask.shape)
+    mdf = spark.createDataFrame(pd.DataFrame({
+        "y": ys.ravel().astype(np.int32),
+        "x": xs.ravel().astype(np.int32),
+        "m": mask.ravel(),
+    }))
+    monkeypatch.setattr(label_cc, "min_label_roots", spy)
+    # 1,024 blocks in 8 pre-label tasks, not 128: keeps the test bounded,
+    # and a result must not depend on the partition count anyway
+    monkeypatch.setattr(label_cc, "prelabel_partitions", lambda s, n: 8)
+    got = {
+        (r["y"], r["x"]): r["label"]
+        for r in label(mdf, (h, w), block=4).collect()
+    }
+    assert got == _bfs_components(mask)
+    # the driver merge saw the whole fragment graph (block merges are
+    # in the UDF workers, whose calls this spy does not see)
+    assert len(seen) == 1 and seen[0] > 1500
+
+
+def test_min_label_roots_matches_union_find():
+    """Nodes map to their component minimum: an unsorted chain, a node
+    with no edge, a self-loop and duplicate edges; then random sparse
+    graphs against a dict union-find reference."""
+    eu = np.array([4, 2, 2, 5, 6, 6])
+    ev = np.array([2, 0, 0, 5, 3, 6])
+    assert label_cc.min_label_roots(7, eu, ev).tolist() == [0, 1, 0, 3, 0, 5, 3]
+
+    rng = np.random.default_rng(11)
+    for n, m in ((50, 30), (2000, 1500), (2000, 2600)):
+        eu, ev = rng.integers(0, n, m), rng.integers(0, n, m)
+        parent = list(range(n))
+
+        def find(x):
+            while parent[x] != x:
+                parent[x] = parent[parent[x]]
+                x = parent[x]
+            return x
+
+        for a, b in zip(eu.tolist(), ev.tolist()):
+            ra, rb = find(a), find(b)
+            parent[max(ra, rb)] = min(ra, rb)
+        want = [find(x) for x in range(n)]
+        assert label_cc.min_label_roots(n, eu, ev).tolist() == want
+
+
+def test_tile_exchange_one_partition_per_tile(spark):
+    """The unkeyed map_overlap_tiles exchange is an explicit repartition
+    into one partition per tile (the prelabel_partitions rule), so AQE
+    leaves it alone and its output keeps that count uncached and in a
+    persisted copy — not spark.sql.shuffle.partitions, and not whatever the
+    few tile groups' bytes would coalesce to."""
+    from pyspark.sql import functions as F
+
+    from dask_image_spark.caching import persist_tracked
+    from dask_image_spark.operators.chunked import map_overlap_tiles
+    from dask_image_spark.operators.label_cc import prelabel_partitions
+
+    side, block = 64, 16
+    n_tiles = (side // block) ** 2
+    assert prelabel_partitions(spark, n_tiles) == n_tiles
+    px = spark.range(side * side).select(
+        (F.col("id") / side).cast("int").alias("y"),
+        (F.col("id") % side).cast("int").alias("x"),
+        F.col("id").cast("double").alias("value"),
+    )
+    out = map_overlap_tiles(px, lambda t: t, (side, side), depth=1, block=block)
+    assert out.rdd.getNumPartitions() == n_tiles
+    kept = persist_tracked(out)
+    assert kept.count() == side * side
+    assert kept.rdd.getNumPartitions() == n_tiles
