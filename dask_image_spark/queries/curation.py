@@ -6442,8 +6442,8 @@ _LOF_SALT = 16
 # gate; measured on DuckDB 1.0.0 (ADVICE r10). A DuckDB upgrade could
 # re-parallelize the nine materializations — values stay correct, but
 # the spill returns; the x32-tier LOF run stays in the scale sweep
-# (scripts/scale_parity_x64.py) precisely so such a regression surfaces
-# as a sweep timeout/spill, never in production.
+# (scripts/scale_parity.py --tier 64) precisely so such a regression
+# surfaces as a sweep timeout/spill, never in production.
 # Exactness is unchanged: for a fixed (dx, dy) each point probes exactly
 # ONE b-cell, so PARTITION BY ia within a branch IS the per-(point, cell)
 # local top-k; every (ia, ib) pair occurs exactly once across branches,

@@ -70,15 +70,6 @@ def assert_contiguous_positions(pdf, what: str) -> int:
     return n
 
 
-# Corpus augmentation for scripts/scale_parity_x{16,64,256}.py: re-keyed
-# copies whose text gets a vowel (past 4x also a consonant) rotation.
-# Rotating letters dissociates almost every shingle/token across copies,
-# so vocabulary and LSH buckets replicate i.i.d. instead of colliding.
-X4_OFFSET = 20_000_000
-X4_ROTS = ("aeiou", "eioua", "iouae", "ouaei")
-X16_CROTS = ("rstln", "stlnr", "tlnrs", "lnrst")
-
-
 @register(
     "dedup_exact_groups",
     f"""

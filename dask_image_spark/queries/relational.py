@@ -1230,19 +1230,6 @@ def q9_product_type_profit(spark, sf_dir):
     )
 
 
-def lineitem_x4(spark, sf_dir):
-    """Fact-growth augmentation for scripts/scale_parity_x16.py: every
-    lineitem row replicated 4x (explode over a 4-literal array — a
-    zero-shuffle generator). Row count scales 4x while the KEY DOMAIN is
-    unchanged, which is exactly the axis a growing fact table moves
-    along (more rows per order/part, dims constant) — the analog of the
-    text ops' vowel-rotation corpus for the relational family."""
-    li = load_table(spark, sf_dir, "lineitem")
-    return li.withColumn(
-        "_copy", F.explode(F.array(*[F.lit(i) for i in range(4)]))
-    ).drop("_copy")
-
-
 @register(
     "q11_important_stock",
     """

@@ -22,7 +22,7 @@ SF = "/root/testdata/sf0.001"
 
 def main() -> None:
     q.load_all()
-    spark = get_spark(app_name="oracle-type-dump", master="local[8]")
+    spark = get_spark(app_name="oracle-type-dump")
     con = duck_con(SF)
     pairs: dict[tuple[str, str], list[str]] = {}
     for name, oracle in q.all_oracles().items():

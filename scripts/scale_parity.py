@@ -1,44 +1,68 @@
 #!/usr/bin/env python
-"""Scale-parity sweep ONE TIER ABOVE sf0.1 (VERDICT r9 item 8): the ten
-shuffle-heaviest queries re-graded with the driver-identical
-row/schema/value-hash compare (tests/parity.py) against an AUGMENTED
-table set materialized from sf0.1 —
+"""Scale-parity sweep above sf0.1: registered queries re-graded with the
+driver-identical row/schema/value-hash compare (tests/parity.py) against
+an AUGMENTED table set materialized from sf0.1. One ``TIERS`` row per
+tier sets the copies of each table:
 
-  lineitem  x4  (relational.py::lineitem_x4 — fact growth, key domain
-                 unchanged: 24M rows at sf0.1 base of 6M)
-  documents x16 (pipeline.py's vowel x consonant rotations, FULL schema:
-                 80k docs; translate() is 1:1 so n_chars stays correct)
-  events    x4  (full schema; event_id offset per copy, ts shifted by
-                 +400 days per copy so copies neither collide nor
-                 interleave; written as TIMESTAMP_NTZ to match the
-                 generator's physical encoding)
-  embeddings x8 (vec_id offset; one dim deterministically perturbed per
-                 copy so copies are near- but not exact duplicates)
-  region/nation/customer/supplier/part/orders copied as-is (dims
-                 constant — the axis a growing fact table moves along)
+  tier  lineitem  documents  events  embeddings
+   16      x4       x16        x4       x8
+   64      x16      x64        x16      x32
+  256      x64      x256       x64      x32
+
+Lineitem rows are replicated (row count grows, KEY DOMAIN unchanged: the
+axis a growing fact table moves along). Documents are re-keyed copies with
+rotated letters (``ALPHABETS``), so vocabulary and LSH buckets replicate
+i.i.d. Events shift +400 days per copy (copies of the ~30-day timeline
+never meet in a session/window) with non-colliding ids, as TIMESTAMP_NTZ
+like the generator writes them. Embeddings get a vec_id offset and dim 0
+perturbed by k*1e-3. The six dimension tables are copied as-is.
 
 The augmentation runs ONCE in Spark and is MATERIALIZED to parquet, so
 Spark and DuckDB read byte-identical inputs — the sweep tests the
-ENGINES' execution at ~4-16x the previous ceiling (exchange shapes, float
-accumulation order, tie-breaking under real duplicate mass), not the
-augmentation arithmetic.
+ENGINES' execution (exchange shapes, float accumulation order,
+tie-breaking under real duplicate mass), not the augmentation. Across
+tiers the point is the SLOPE: a shape secretly superlinear in either
+engine shows up as a wall-clock blowup before it shows up as a wrong
+answer. Results are recorded in COVERAGE.md and SCALE.md.
 
-Usage: python scripts/scale_parity_x16.py   (prints one JSON line;
-rebuilds the sweep dir only if missing — delete /tmp/dask_image_spark_scale
-to force regeneration). Results recorded in COVERAGE.md + SCALE.md.
+Usage: python scripts/scale_parity.py --tier {16,64,256}
+                                      [--only a,b | --only @file]
+
+Prints one JSON line. ``--only`` runs exactly the named registered
+queries instead of the tier's lists. The sweep dir
+/tmp/dask_image_spark_scale/x{tier} is built only if missing — delete it
+to force regeneration.
 """
 
 from __future__ import annotations
 
+import argparse
+import functools
+import itertools
 import json
 import os
 import sys
 import time
+from dataclasses import dataclass
+from pathlib import Path
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 BASE = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-OUT = "/tmp/dask_image_spark_scale/x16"
+OUT_ROOT = "/tmp/dask_image_spark_scale"
+
+# Document copy i is re-keyed by i * DOC_ID_OFFSET. The alphabets hold
+# letters present throughout the synthetic vocabulary and are pairwise
+# disjoint, and each rotation is a permutation of its alphabet, so the
+# composed translate() is 1:1: lang/source/n_chars stay consistent.
+DOC_ID_OFFSET = 20_000_000
+ALPHABETS = ("aeiou", "rstln", "bcdgm", "fhpwy")
+
+
+def rotations(alphabet: str) -> tuple[str, ...]:
+    """The alphabet's first four cyclic rotations, identity first."""
+    return tuple(alphabet[i:] + alphabet[:i] for i in range(4))
+
 
 # The shuffle-heaviest registered queries (VERDICT r9 plan audit):
 # TPC-H heavy aggregation/join chains on the x4 fact,
@@ -47,7 +71,7 @@ OUT = "/tmp/dask_image_spark_scale/x16"
 # on the x4 timeline. The first ten are the round-10 core sweep (VERDICT
 # item 8); the rest widen the tier-2 evidence across the dedup/text/
 # graph/retention families at the same augmented scale.
-SWEEP = [
+SWEEP_16 = [
     "q1_pricing_summary",
     "q3_join_topk",
     "q9_product_type_profit",
@@ -483,13 +507,167 @@ SWEEP = [
 # windowed walks (8 s at this scale); the oracles stay feasible at the
 # driver's grading SFs, where the full value-hash check still runs every
 # round. This is a truth-harness depth limit, not an engine limitation.
-ENGINE_ONLY = [
+ENGINE_ONLY_16 = [
     "curation_pipeline",
     "pack_sequences",
 ]
 
+# The round-10 core ten (VERDICT r9 item 8's list, one more tier up),
+# then a widening set across the same heavy families — including
+# dedup_simhash_pairs, the direct ×4-docs stress test for the round-10
+# 60-bit banding rewrite (320k docs, 32768 keys/band).
+SWEEP_64 = [
+    "q1_pricing_summary",
+    "q3_join_topk",
+    "q9_product_type_profit",
+    "q21_suppliers_kept_waiting",
+    "dedup_minhash_lsh",
+    "tfidf_cosine_pairs",
+    "dedup_exact_groups",
+    "sessionize",
+    "rolling_1h_user_stats",
+    "window_rank",
+    # --- widening batch ---
+    "q4_order_priority",
+    "q13_customer_distribution",
+    "q18_large_orders",
+    "dedup_simhash_pairs",
+    "bm25_search",
+    "session_stats",
+    "asof_join",
+    "cohort_retention",
+    "max_concurrent_sessions",
+    "event_transition_matrix",
+    # --- second widening: graph / ANN / spatial / incremental dedup ---
+    "pagerank_2iter",
+    "graph_triangle_count",
+    "kcore_decomposition",
+    "similarity_ivf_topk",
+    "ann_recall_ivf",
+    "dedup_incremental_minhash",
+    "spatial_radius_join",
+    "dedup_ngram_jaccard",
+    "quality_entropy",
+    "funnel_conversion",
+    # --- third widening: timeseries / embeddings / text heavies ---
+    "acf_hourly",
+    "rolling_corr_24h",
+    "seasonal_decompose_ma",
+    "cusum_changepoint",
+    "asof_join_tolerance",
+    "similarity_hamming_topk",
+    "matryoshka_recall",
+    "embedding_quantize_int8",
+    "token_pmi_bigrams",
+    "token_bpe_count",
+    # --- fourth widening: streaming batch-equivalence on the x16
+    # timeline + lakehouse + blocked-dedup heavies ---
+    "streaming_ohlc",
+    "streaming_dedup_watermark",
+    "streaming_session_state",
+    "streaming_left_outer_join",
+    "session_window_batch",
+    "cdc_snapshot_diff",
+    "merge_three_way",
+    "mv_incremental_refresh",
+    "dedup_levenshtein",
+    "golden_record_survivorship",
+    # --- fifth widening: the round-10 fix set, one more tier up —
+    # every query whose plan or contract was changed this round gets a
+    # tier-3 evidence point that the fix itself scales ---
+    "local_outlier_factor",       # ring equi-join (was BNLJ over all pairs)
+    "facility_location_greedy",   # explicit repartition (was 1-task N2 stream)
+    "psm_att_nearest",            # bounded nearest-control map (was O(n2) frame)
+    "cluster_medoid",             # salted within-label pairs (was 8-task ceiling)
+    "dedup_semantic",             # salted within-cluster pairs (same rule)
+    "udaf_geomean",               # x>0 log-domain filter
+    "boxcox_lambda_grid",         # x>0 log-domain filter
+    "tree_depth_doubling",        # dense-rank heap (was sparse-id drop)
+    "lsh_band_sweep",             # MATERIALIZED-CTE oracle (was 58GB spill)
+    "trimmed_mean",               # EPS-rounded quantile cuts (tie-boundary)
+    # --- sixth widening: the heaviest tier-2 queries not yet at tier 3
+    # (blocked dedup variants, text fits, transport, retrieval eval,
+    # the band_bits-knob ANN graph) ---
+    "dedup_minhash_survivors",
+    "dedup_substring_spans",
+    "dedup_ngram_containment",
+    "jaccard_prefix_filter_join",
+    "udtf_ngrams",
+    "bpe_merge_steps",
+    "sinkhorn_2iter",
+    "map_mean_avg_precision",
+    "knn_graph_lsh",
+    "quality_repetition",
+]
 
-def _write_flat(df, t: str) -> None:
+# The core ten, then two batches that re-grade tier-3 families one
+# tier up.
+SWEEP_256 = [
+    "q1_pricing_summary",
+    "q3_join_topk",
+    "q9_product_type_profit",
+    "q21_suppliers_kept_waiting",
+    "dedup_minhash_lsh",
+    "tfidf_cosine_pairs",
+    "dedup_exact_groups",
+    "sessionize",
+    "rolling_1h_user_stats",
+    "window_rank",
+    # Second batch (round 11): the tier-3 heavy set re-graded one tier up,
+    # biased to the axes that actually GROW at tier 4 (events x64, fact x64,
+    # docs x256) — the embedding-axis queries are excluded (embeddings stay
+    # x32, same as tier 3: re-running them re-measures the same point) and so
+    # is knn_graph_lsh (its graded band_bits=8 contract does N^2/256 work BY
+    # CONTRACT; at 1.28M docs that is ~36x the x64 tier's 2251 s — the knob,
+    # not the engine, is what scales it; re-proving the contract costs hours
+    # and teaches nothing new).
+    "q18_large_orders",
+    "session_stats",
+    "asof_join",
+    "cohort_retention",
+    "max_concurrent_sessions",
+    "event_transition_matrix",
+    "bm25_search",
+    "bpe_merge_steps",
+    "dedup_ngram_containment",
+    "dedup_substring_spans",
+    # Third batch (round 12): the graph family + exploded-text queries whose
+    # corpus-scale frames were merge-pinned this round — never tier-proven
+    # before (the graph fixture becomes 1.28M nodes / 3.84M edges at x256
+    # docs, the first size point above sf0.1 for the whole family). The
+    # point: the pins hold where they matter AND the fixed-iteration shapes
+    # stay linear in |edges|.
+    "pagerank_2iter",
+    "lpa_communities_2iter",
+    "bellman_ford_3round",
+    "hits_2iter",
+    "katz_centrality_2iter",
+    "wl_relabel_1iter",
+    "graph_triangle_count",
+    "clustering_coefficient",
+    "textrank_keywords",
+    "dedup_lsh_salted_skew",
+]
+
+
+@dataclass(frozen=True)
+class Tier:
+    lineitem: int  # copies of every lineitem row
+    doc_alphabets: int  # documents: 4 ** doc_alphabets copies
+    events: int
+    embeddings: int
+    sweep: list[str]
+    engine_only: list[str]
+
+
+TIERS = {
+    16: Tier(4, 2, 4, 8, SWEEP_16, ENGINE_ONLY_16),
+    64: Tier(16, 3, 16, 32, SWEEP_64, []),
+    256: Tier(64, 4, 64, 32, SWEEP_256, []),
+}
+
+
+def _write_flat(df, out: str, t: str) -> None:
     """Write a table as a SINGLE parquet FILE named {t}.parquet — the
     physical layout the parity harness's DuckDB views expect (the
     generator ships flat files; a Spark part-file directory would match
@@ -497,58 +675,56 @@ def _write_flat(df, t: str) -> None:
     import glob
     import shutil
 
-    stage = f"{OUT}/_stage_{t}"
+    stage = f"{out}/_stage_{t}"
     df.coalesce(1).write.mode("overwrite").parquet(stage)
     part = glob.glob(f"{stage}/part-*.parquet")[0]
-    shutil.move(part, f"{OUT}/{t}.parquet")
+    shutil.move(part, f"{out}/{t}.parquet")
     shutil.rmtree(stage)
 
 
-def build_sweep_dir(spark) -> None:
+def build_sweep_dir(spark, tier: Tier, out: str) -> None:
     import shutil
 
+    from pyspark.sql import DataFrame
     from pyspark.sql import functions as F
 
-    from dask_image_spark.queries.pipeline import X4_OFFSET, X4_ROTS, X16_CROTS
-    from dask_image_spark.queries.relational import lineitem_x4
     from dask_image_spark.sources.tables import load_table
 
-    os.makedirs(OUT, exist_ok=True)
+    def write_union(t, frames):
+        _write_flat(functools.reduce(DataFrame.unionAll, frames), out, t)
 
-    # dims: copy as-is (constant-dimension axis)
+    os.makedirs(out, exist_ok=True)
+
     for t in ("region", "nation", "customer", "supplier", "part", "orders"):
-        shutil.copyfile(f"{BASE}/{t}.parquet", f"{OUT}/{t}.parquet")
+        shutil.copyfile(f"{BASE}/{t}.parquet", f"{out}/{t}.parquet")
 
-    # lineitem x4 — the registered augmenter, full schema already
-    _write_flat(lineitem_x4(spark, BASE), "lineitem")
+    copy = F.explode(F.array(*[F.lit(i) for i in range(tier.lineitem)]))
+    li = load_table(spark, BASE, "lineitem")
+    _write_flat(li.withColumn("_copy", copy).drop("_copy"), out, "lineitem")
 
-    # documents x16 — full schema (docs_x16 selects (doc_id, text) only;
-    # the rotations are 1:1 character maps so lang/source/n_chars replicate
-    # unchanged and stay consistent)
+    # copy index in mixed radix over the alphabets, first alphabet most
+    # significant, each copy translating the first alphabet first
+    alphabets = ALPHABETS[: tier.doc_alphabets]
     d = load_table(spark, BASE, "documents")
-    out = None
-    for c, rot in enumerate(X4_ROTS):
-        for c2, crot in enumerate(X16_CROTS):
-            cp = d.select(
-                (F.col("doc_id") + (c * 4 + c2) * X4_OFFSET).alias("doc_id"),
-                F.translate(
-                    F.translate("text", "aeiou", rot), "rstln", crot
-                ).alias("text"),
-                "lang",
-                "source",
-                "n_chars",
-            )
-            out = cp if out is None else out.unionAll(cp)
-    _write_flat(out, "documents")
 
-    # events x4 — copies shifted +400 days (beyond the ~30-day timeline:
-    # no cross-copy session/window interactions) with non-colliding ids;
-    # TIMESTAMP_NTZ on disk to match the generator's physical encoding
-    # (DuckDB must read naive TIMESTAMP, not TIMESTAMPTZ)
+    def doc_copy(idx, rots):
+        text = F.col("text")
+        for alphabet, rot in zip(alphabets, rots):
+            text = F.translate(text, alphabet, rot)
+        return d.select(
+            (F.col("doc_id") + idx * DOC_ID_OFFSET).alias("doc_id"),
+            text.alias("text"),
+            "lang",
+            "source",
+            "n_chars",
+        )
+
+    combos = itertools.product(*(rotations(a) for a in alphabets))
+    write_union("documents", (doc_copy(i, r) for i, r in enumerate(combos)))
+
     ev = load_table(spark, BASE, "events")
-    copies = None
-    for k in range(4):
-        cp = ev.select(
+    write_union("events", (
+        ev.select(
             (F.col("event_id") + k * 100_000_000).alias("event_id"),
             (F.col("ts") + F.expr(f"INTERVAL {400 * k} DAYS")).cast(
                 "timestamp_ntz"
@@ -558,15 +734,12 @@ def build_sweep_dir(spark) -> None:
             "value",
             "props",
         )
-        copies = cp if copies is None else copies.unionAll(cp)
-    _write_flat(copies, "events")
+        for k in range(tier.events)
+    ))
 
-    # embeddings x8 — near-duplicate copies (dim 0 perturbed by k*1e-3),
-    # materialized so both engines read the same floats
     emb = load_table(spark, BASE, "embeddings")
-    ecopies = None
-    for k in range(8):
-        cp = emb.select(
+    write_union("embeddings", (
+        emb.select(
             (F.col("vec_id") + k * 1_000_000).alias("vec_id"),
             F.expr(
                 f"transform(embedding, (v, i) -> CASE WHEN i = 0 THEN "
@@ -574,92 +747,82 @@ def build_sweep_dir(spark) -> None:
             ).alias("embedding"),
             "label",
         )
-        ecopies = cp if ecopies is None else ecopies.unionAll(cp)
-    _write_flat(ecopies, "embeddings")
+        for k in range(tier.embeddings)
+    ))
 
 
-def main() -> None:
+def main(argv: list[str] | None = None) -> None:
     from dask_image_spark import queries as q
+
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("--tier", type=int, choices=sorted(TIERS), required=True)
+    ap.add_argument(
+        "--only",
+        help="comma list of registered query names, or @file with one per "
+        "line; runs exactly these instead of the tier's lists",
+    )
+    args = ap.parse_args(argv)
+    tier, out = TIERS[args.tier], f"{OUT_ROOT}/x{args.tier}"
+
+    q.load_all()
+    registry, oracles = q.all_queries(), q.all_oracles()
+    if args.only is None:
+        names = tier.engine_only + tier.sweep
+    else:
+        names = (
+            Path(args.only[1:]).read_text().split()
+            if args.only.startswith("@")
+            else [n for n in args.only.split(",") if n]
+        )
+        # fail before any Spark work: a typo used to surface as a
+        # KeyError result minutes into a tier run
+        unknown = [n for n in names if n not in registry]
+        if unknown:
+            ap.error(f"--only names not in the registry: {unknown}")
+
     from dask_image_spark.session import get_spark
     from tests.parity import compare
 
-    q.load_all()
-    spark = get_spark(
-        app_name="scale-parity-x16",
-        master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]",
-    )
-    if not os.path.isfile(f"{OUT}/lineitem.parquet"):
+    spark = get_spark(app_name=f"scale-parity-x{args.tier}")
+    if not os.path.isfile(f"{out}/lineitem.parquet"):
         t0 = time.perf_counter()
-        build_sweep_dir(spark)
+        build_sweep_dir(spark, tier, out)
         print(
             f"# sweep dir built in {time.perf_counter() - t0:.1f}s",
             file=sys.stderr,
         )
 
-    # --only a,b,c  (or --only @/path/to/names.txt, one per line): run a
-    # subset — new batches verify alone without re-running the standing
-    # 200+ already-committed results. The committed SWEEP list stays the
-    # cumulative record; --only is a session-time filter.
-    only: set[str] | None = None
-    if len(sys.argv) >= 3 and sys.argv[1] == "--only":
-        arg = sys.argv[2]
-        if arg.startswith("@"):
-            only = set(open(arg[1:]).read().split())
-        else:
-            only = set(arg.split(","))
-        unknown = only - set(SWEEP) - set(ENGINE_ONLY)
-        if unknown:
-            print(f"# --only names not in SWEEP: {sorted(unknown)}",
-                  file=sys.stderr)
-            sys.exit(2)
-
     results: dict[str, str] = {}
-    registry, oracles = q.all_queries(), q.all_oracles()
-    for name in ENGINE_ONLY:
-        if only is not None and name not in only:
-            continue
+    secs: dict[str, float] = {}
+    for name in dict.fromkeys(names):
         t0 = time.perf_counter()
         try:
-            n = registry[name](spark, OUT).count()
-            results[name] = f"engine-only: {n} rows"
-        except Exception as e:  # noqa: BLE001
-            results[name] = f"{type(e).__name__}: {e}"[:300]
-        finally:
-            q.release_caches()
-        print(
-            f"# {name}: {results[name][:80]}"
-            f" ({time.perf_counter() - t0:.1f}s)",
-            file=sys.stderr,
-        )
-    for name in SWEEP:
-        if only is not None and name not in only:
-            continue
-        t0 = time.perf_counter()
-        try:
-            problems = compare(registry[name](spark, OUT), oracles[name], OUT)
-            results[name] = (
-                "ok" if not problems else "; ".join(problems)[:300]
-            )
+            df = registry[name](spark, out)
+            if name in tier.engine_only:
+                results[name] = f"engine-only: {df.count()} rows"
+            else:
+                problems = compare(df, oracles[name], out)
+                results[name] = "; ".join(problems)[:300] or "ok"
         except Exception as e:  # noqa: BLE001 — per-query isolation
             results[name] = f"{type(e).__name__}: {e}"[:300]
         finally:
             q.release_caches()
+        secs[name] = round(time.perf_counter() - t0, 1)
         print(
-            f"# {name}: {results[name][:80]}"
-            f" ({time.perf_counter() - t0:.1f}s)",
+            f"# {name}: {results[name][:80]} ({secs[name]}s)",
             file=sys.stderr,
         )
 
     n_ok = sum(
-        1 for v in results.values()
-        if v == "ok" or v.startswith("engine-only")
+        v == "ok" or v.startswith("engine-only") for v in results.values()
     )
     print(
         json.dumps(
             {
-                "metric": "scale_parity_x16",
+                "metric": f"scale_parity_x{args.tier}",
                 "n_ok": n_ok,
                 "n_total": len(results),
+                "secs": secs,
                 "results": results,
             }
         )

@@ -1,11 +1,13 @@
 """``scripts/*.py`` run by hand only, so a deleted engine name they import
-surfaces nowhere else: resolve every ``from dask_image_spark... import``
-and ``from scripts... import`` in them (function-local ones included)
-without Spark, and keep the retired ``bench`` harness from returning."""
+surfaces nowhere else: resolve every ``from dask_image_spark... import``,
+``from scripts... import`` and ``from tests... import`` in them
+(function-local ones included) without Spark, and keep the retired
+``bench`` harness from returning."""
 
 from __future__ import annotations
 
 import ast
+import functools
 import importlib
 from pathlib import Path
 
@@ -13,7 +15,7 @@ import pytest
 
 ROOT = Path(__file__).resolve().parent.parent
 SCRIPTS = sorted((ROOT / "scripts").glob("*.py"))
-CHECKED_PACKAGES = ("dask_image_spark", "scripts")
+CHECKED_PACKAGES = ("dask_image_spark", "scripts", "tests")
 
 
 def _from_imports(path: Path):
@@ -28,10 +30,34 @@ def _from_imports(path: Path):
                 yield node.module, alias.name, node.lineno
 
 
+@functools.lru_cache(maxsize=None)
+def _imported_names(path: Path) -> frozenset:
+    return frozenset((mod, name) for mod, name, _ in _from_imports(path))
+
+
+# scale_parity_x{16,64,256}.py were merged into scale_parity.py, which now
+# makes the three imports they shared; their cases keep the ids the suite
+# has always reported and check that the merged script still makes them.
+MERGED_INTO = ROOT / "scripts" / "scale_parity.py"
+MERGED_IMPORTS = (
+    ("dask_image_spark.sources.tables", "load_table"),
+    ("dask_image_spark", "queries"),
+    ("dask_image_spark.session", "get_spark"),
+)
+MERGED_LINES = {
+    "scale_parity_x16.py": (514, 582, 583),
+    "scale_parity_x64.py": (159, 233, 234),
+    "scale_parity_x256.py": (123, 198, 199),
+}
+
 CASES = [
-    pytest.param(mod, name, id=f"{p.name}:{line}:{mod}.{name}")
+    pytest.param(p, mod, name, id=f"{p.name}:{line}:{mod}.{name}")
     for p in SCRIPTS
     for mod, name, line in _from_imports(p)
+] + [
+    pytest.param(MERGED_INTO, mod, name, id=f"{old}:{line}:{mod}.{name}")
+    for old, lines in MERGED_LINES.items()
+    for (mod, name), line in zip(MERGED_IMPORTS, lines)
 ]
 
 
@@ -40,8 +66,11 @@ def test_scripts_have_checked_imports():
     assert CASES, "no dask_image_spark/scripts imports found in scripts/"
 
 
-@pytest.mark.parametrize("module,name", CASES)
-def test_script_import_resolves(module, name):
+@pytest.mark.parametrize("script,module,name", CASES)
+def test_script_import_resolves(script, module, name):
+    assert (module, name) in _imported_names(script), (
+        f"{script.name} no longer imports {module}.{name}"
+    )
     mod = importlib.import_module(module)
     assert hasattr(mod, name), f"{module} has no attribute {name!r}"
 
