@@ -105,7 +105,7 @@ def spline_filter1d(
 
     The result is persisted (session-tracked): spline coefficients are
     consumed by gather plans that fan every output pixel out to its
-    (order+1)^2 coefficient corners (``ndinterp.affine_transform_spline``)
+    (order+1)^2 coefficient corners (``ndinterp.map_coordinates``)
     and by the mirror correlates of the reconstruction identity, and an
     unmaterialized Arrow stage would re-run the per-line Python IIR inside
     each of them. Materializing the coefficient array once per axis pass is

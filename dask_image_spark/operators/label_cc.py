@@ -390,16 +390,16 @@ def label(
             .filter(F.col("lbl") != F.col("lbl_b"))
             .select("lbl", "lbl_b")
         )
-        head = edges.distinct().limit(MAX_DRIVER_EDGES + 1).collect()
-        if len(head) > MAX_DRIVER_EDGES:
+        head = edges.distinct().limit(MAX_DRIVER_EDGES + 1).toArrow()
+        if head.num_rows > MAX_DRIVER_EDGES:
             # Fragment graph too large to centralize: merge it distributed
             # instead of OOMing the driver. Raises if it does not converge.
             comp = graph.min_label_components(edges, "lbl", "lbl_b")
             return pix.join(
                 comp.withColumnRenamed("node", "lbl"), on="lbl", how="left"
             ).select("y", "x", F.coalesce("comp", "lbl").alias("label"))
-        la = np.array([r["lbl"] for r in head], dtype=np.int64)
-        lb = np.array([r["lbl_b"] for r in head], dtype=np.int64)
+        la = head.column("lbl").to_numpy()
+        lb = head.column("lbl_b").to_numpy()
 
     if la.size == 0:
         return pix.select("y", "x", F.col("lbl").alias("label"))

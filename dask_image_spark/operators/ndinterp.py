@@ -3,11 +3,14 @@
 Reference: ``dask_image/ndinterp/__init__.py::affine_transform`` computes,
 per output chunk, the inverse-mapped input region and runs scipy's
 ``affine_transform`` on it. Relationally the same thing is a **gather
-join**: each output coordinate computes its source coordinate as an
-expression and equi-joins the pixel table — the only "join-like" operator
-the reference has. Order 0 (nearest) joins one source pixel; order 1
-(bilinear) joins the four corners with interpolation weights computed in
-SQL. Order >= 2 needs the spline prefilter (see ``operators/chunked.py``).
+join**: each output point carries its fractional source coordinate as an
+expression, fans out to the interpolation taps around it through a
+broadcast tap table, and equi-joins the pixel table — the only "join-like"
+operator the reference has. :func:`map_coordinates` is that one gather for
+every order (0 nearest, 1 linear, 2-5 B-spline after the prefilter in
+``operators/chunked.py``) and any rank; :func:`affine_transform`,
+:func:`rotate` and the zoom / coordinate-list queries only build the
+source coordinates.
 
 At scale the gather join shuffles on the computed source coordinate — the
 same single-shuffle pattern as the stencils; partition pruning applies when
@@ -16,138 +19,18 @@ the transform maps an output partition to a bounded input region.
 
 from __future__ import annotations
 
+import functools
+import itertools
+import math
+import operator
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from dask_image_spark.functions.boundary import remap_sql
 from dask_image_spark.functions.localrel import values_df
-
-
-def _src_exprs(matrix, offset):
-    (m00, m01), (m10, m11) = matrix
-    o0, o1 = offset
-    fy = F.lit(float(m00)) * F.col("y") + F.lit(float(m01)) * F.col("x") + F.lit(float(o0))
-    fx = F.lit(float(m10)) * F.col("y") + F.lit(float(m11)) * F.col("x") + F.lit(float(o1))
-    return fy, fx
-
-
-def affine_transform_order0(
-    px: DataFrame, matrix, offset=(0.0, 0.0), shape=None,
-    mode: str = "nearest", cval: float = 0.0, keys=(),
-) -> DataFrame:
-    """Nearest-neighbor affine: source = round(M @ out + offset), one gather
-    join. Rounding is floor(v + 0.5) — fixed, documented tie behavior that
-    the oracle reproduces exactly.
-
-    ``mode`` is the upstream ``affine_transform(mode=)`` out-of-range
-    surface: reflect/mirror/nearest/wrap remap the source coordinate via
-    the shared ``remap_sql`` expression (identical text on both engines);
-    ``constant`` turns the gather into a left join with ``coalesce(v,
-    cval)`` — out-of-range reads cost nothing extra at scale (absent keys
-    simply don't match)."""
-    keys = list(keys)
-    h, w = shape
-    fy, fx = _src_exprs(matrix, offset)
-    out = px.select(*keys, "y", "x").withColumns(
-        {
-            "ry": F.floor(fy + 0.5).cast("int"),
-            "rx": F.floor(fx + 0.5).cast("int"),
-        }
-    )
-    remap = "constant" if mode == "constant" else mode
-    out = out.withColumns(
-        {
-            "sy": F.expr(remap_sql("ry", h, remap)).cast("int"),
-            "sx": F.expr(remap_sql("rx", w, remap)).cast("int"),
-        }
-    )
-    src = px.select(
-        *keys, F.col("y").alias("sy"), F.col("x").alias("sx"),
-        F.col("value").alias("v"),
-    )
-    if mode == "constant":
-        return (
-            out.join(src, on=[*keys, "sy", "sx"], how="left")
-            .select(
-                *keys, "y", "x",
-                F.coalesce(F.col("v"), F.lit(float(cval))).alias("v"),
-            )
-        )
-    return out.join(src, on=[*keys, "sy", "sx"]).select(*keys, "y", "x", "v")
-
-
-def affine_transform_order1(
-    px: DataFrame, matrix, offset=(0.0, 0.0), shape=None, keys=(),
-    mode: str = "nearest", cval: float = 0.0,
-) -> DataFrame:
-    """Bilinear affine: join the 4 corner pixels with weights
-    (1-ty/ty) x (1-tx/tx) computed in SQL. ``mode`` handles the upstream
-    out-of-range surface exactly as :func:`affine_transform_order0` —
-    coordinate remap for the symmetric/periodic modes, left-join +
-    ``coalesce(sv, cval)`` per corner for ``constant``."""
-    keys = list(keys)
-    h, w = shape
-    fy, fx = _src_exprs(matrix, offset)
-    spark = px.sparkSession
-    corners = values_df(spark, "cy, cx", [(0, 0), (0, 1), (1, 0), (1, 1)])
-    base = px.select(*keys, "y", "x").withColumns(
-        {"fy": fy, "fx": fx}
-    ).withColumns(
-        {
-            "y0": F.floor(F.col("fy")).cast("int"),
-            "x0": F.floor(F.col("fx")).cast("int"),
-            "ty": F.col("fy") - F.floor(F.col("fy")),
-            "tx": F.col("fx") - F.floor(F.col("fx")),
-        }
-    )
-    remap = "constant" if mode == "constant" else mode
-    j = base.crossJoin(F.broadcast(corners)).withColumns(
-        {
-            "ry": F.col("y0") + F.col("cy"),
-            "rx": F.col("x0") + F.col("cx"),
-            "wgt": (
-                F.when(F.col("cy") == 0, 1 - F.col("ty")).otherwise(F.col("ty"))
-                * F.when(F.col("cx") == 0, 1 - F.col("tx")).otherwise(F.col("tx"))
-            ),
-        }
-    ).withColumns(
-        {
-            "sy": F.expr(remap_sql("ry", h, remap)).cast("int"),
-            "sx": F.expr(remap_sql("rx", w, remap)).cast("int"),
-        }
-    )
-    src = px.select(
-        *keys, F.col("y").alias("sy"), F.col("x").alias("sx"),
-        F.col("value").alias("sv"),
-    )
-    if mode == "constant":
-        return (
-            j.join(src, on=[*keys, "sy", "sx"], how="left")
-            .groupBy(*keys, "y", "x")
-            .agg(
-                F.sum(
-                    F.col("wgt")
-                    * F.coalesce(F.col("sv"), F.lit(float(cval)))
-                ).alias("v")
-            )
-        )
-    return (
-        j.join(src, on=[*keys, "sy", "sx"])
-        .groupBy(*keys, "y", "x")
-        .agg(F.sum(F.col("wgt") * F.col("sv")).alias("v"))
-    )
-
-
-def _bspline3_weight(u):
-    """Cubic B-spline basis b3(u), support |u| < 2 (Unser's normalization:
-    b3(0)=2/3, b3(±1)=1/6 — the same kernel whose correlation inverts the
-    IIR prefilter)."""
-    a = F.abs(u)
-    return (
-        F.when(a <= 1, 2.0 / 3.0 - a * a + a * a * a / 2.0)
-        .when(a < 2, F.pow(2.0 - a, F.lit(3.0)) / 6.0)
-        .otherwise(F.lit(0.0))
-    )
+from dask_image_spark.operators.chunked import spline_filter1d
+from dask_image_spark.operators.ndfilters import axis_names
 
 
 def _bspline_weight(u, order: int):
@@ -164,7 +47,11 @@ def _bspline_weight(u, order: int):
             .otherwise(F.lit(0.0))
         )
     if order == 3:
-        return _bspline3_weight(u)
+        return (
+            F.when(a <= 1, 2.0 / 3.0 - a * a + a * a * a / 2.0)
+            .when(a < 2, F.pow(2.0 - a, F.lit(3.0)) / 6.0)
+            .otherwise(F.lit(0.0))
+        )
     if order == 4:
         return (
             F.when(a < 0.5, a * a * (a * a * 0.25 - 0.625) + 115.0 / 192.0)
@@ -233,98 +120,143 @@ def bspline_weight_np(u, order: int):
     return out
 
 
-def affine_transform_order3(
-    px: DataFrame, matrix, offset=(0.0, 0.0), shape=None, keys=(),
+def map_coordinates(
+    px: DataFrame, coords: DataFrame, shape, *, order: int = 1,
+    mode: str = "nearest", cval: float = 0.0, keys=(),
 ) -> DataFrame:
-    """Cubic-spline affine transform — see :func:`affine_transform_spline`."""
-    return affine_transform_spline(px, matrix, offset, shape, order=3, keys=keys)
+    """Sample ``px`` (``keys``, axis columns, ``value``) at fractional
+    coordinates (upstream ``scipy.ndimage.map_coordinates``).
 
+    ``coords`` carries one fractional source coordinate per axis, named by
+    ``ndfilters.axis_names(len(shape))``; every other column (the ``keys``
+    among them) is the output's identity and is carried through. Returns
+    those identity columns plus ``v``.
 
-def affine_transform_spline(
-    px: DataFrame, matrix, offset=(0.0, 0.0), shape=None, order: int = 3,
-    keys=(),
-) -> DataFrame:
-    """Spline affine transform of order 2-5 (upstream
-    ``ndinterp/__init__.py::affine_transform`` accepts ``order`` 0-5), mirror
-    boundary (the extension the prefilter assumes).
+    One gather join for every order:
 
-    Two phases, both distributed:
+    * base index per axis: ``floor(f + 0.5)`` for order 0, ``floor(f)``
+      otherwise;
+    * a broadcast table of tap offsets (2 or ``2*(order//2) + 2`` per axis,
+      their product over the axes) fans each point out; order 0's one tap
+      needs no fan-out;
+    * per-axis weights, multiplied in axis order: none for order 0, the
+      lerp ``1 - t`` / ``t`` for order 1, the centered B-spline basis for
+      orders >= 2 (whose source is the prefiltered coefficient table);
+    * ``mode`` remaps each tap's index through the shared ``remap_sql`` text
+      (identical on both engines); ``constant`` makes the gather a left join
+      with ``coalesce(value, cval)`` — out-of-range reads cost nothing
+      extra at scale (absent keys simply don't match);
+    * one equi-join on (keys, source index), then one groupBy sum of the
+      weighted taps — skipped for order 0's single tap.
 
-    1. **Prefilter**: the per-line IIR prefilter cascade along each axis
-       (``chunked.spline_filter1d`` with the order's pole family) turns
-       pixel values into B-spline coefficients — grid lines parallelize
-       across the cluster.
-    2. **Gather join**: every output pixel inverse-maps to a fractional
-       source point and joins the (order+1)^2-ish coefficient neighborhood
-       (a broadcast corner fan-out, exactly the bilinear path's shape),
-       weighted by the separable basis; one shuffle (the final groupBy).
-       The tap window over-covers by design (weights vanish outside the
-       basis support), so one window serves both even and odd orders.
-
-    Sampling at integer points reduces to the B-spline reconstruction
-    identity, which is what the strong-oracle ``affine_order{2,3,4,5}_
-    identity`` queries check end-to-end; arbitrary transforms are
-    differentially tested against a dense numpy implementation of the same
-    spec (tests/test_affine_order3.py).
+    Order-0 rounding is ``floor(v + 0.5)``: a fixed, documented tie rule
+    the oracles reproduce exactly. Orders >= 2 need ``mode="mirror"`` (the
+    prefilter assumes a whole-sample mirror, single bounce: valid while the
+    mapped point stays within one image extent of the border) and rank 2
+    (``spline_filter1d`` is 2-D).
     """
-    from dask_image_spark.operators import chunked
-
+    if not 0 <= order <= 5:
+        raise ValueError(f"interpolation order {order} outside 0..5")
+    if order >= 2 and mode != "mirror":
+        raise ValueError(
+            f"spline order {order} needs mode='mirror' (the prefilter's "
+            f"boundary), got {mode!r}"
+        )
+    if order >= 2 and len(shape) != 2:
+        raise ValueError(
+            f"spline order {order} needs a rank-2 image, got shape {shape}"
+        )
     keys = list(keys)
-    h, w = shape
-    spark = px.sparkSession
-    c0 = chunked.spline_filter1d(px, axis=0, shape=shape, keys=keys, order=order)
-    c = chunked.spline_filter1d(
-        c0.withColumnRenamed("v", "value"), axis=1, shape=shape, keys=keys,
-        order=order,
-    )
-    fy, fx = _src_exprs(matrix, offset)
-    lo, hi = -(order // 2), order // 2 + 1
-    corners = values_df(
-        spark, "cy, cx",
-        [(a, b) for a in range(lo, hi + 1) for b in range(lo, hi + 1)],
-    )
-    base = px.select(*keys, "y", "x").withColumns(
-        {"fy": fy, "fx": fx}
-    ).withColumns(
+    axes = axis_names(len(shape))
+    ident = [c for c in coords.columns if c not in axes]
+    if order >= 2:
+        for axis in (0, 1):
+            px = spline_filter1d(
+                px, axis=axis, shape=shape, keys=keys, order=order
+            ).withColumnRenamed("v", "value")
+    base = coords.withColumns(
         {
-            "y0": F.floor(F.col("fy")).cast("int"),
-            "x0": F.floor(F.col("fx")).cast("int"),
+            f"_{a}0": F.floor(
+                (F.col(a) + 0.5) if order == 0 else F.col(a)
+            ).cast("int")
+            for a in axes
         }
     )
-    j = base.crossJoin(F.broadcast(corners)).withColumns(
+    if order == 0:
+        # one tap: no fan-out join, so no broadcast (and its job) either
+        fan = base.withColumns({f"_c{a}": F.lit(0) for a in axes})
+    else:
+        # Orders >= 2 over-cover the basis support (weights vanish outside
+        # it), so one window serves both even and odd orders.
+        offs = range(2) if order == 1 else range(-(order // 2), order // 2 + 2)
+        taps = values_df(
+            px.sparkSession, ", ".join(f"_c{a}" for a in axes),
+            list(itertools.product(offs, repeat=len(axes))),
+        )
+        wgts = []
+        for a in axes:
+            f, f0, c = F.col(a), F.col(f"_{a}0"), F.col(f"_c{a}")
+            if order == 1:
+                t = f - F.floor(f)
+                wgts.append(F.when(c == 0, 1 - t).otherwise(t))
+            else:
+                wgts.append(_bspline_weight(f - (f0 + c), order))
+        fan = base.crossJoin(F.broadcast(taps)).withColumn(
+            "_w", functools.reduce(operator.mul, wgts)
+        )
+    fan = fan.withColumns(
         {
-            "ry": F.col("y0") + F.col("cy"),
-            "rx": F.col("x0") + F.col("cx"),
-            "wgt": _bspline_weight(
-                F.col("fy") - (F.col("y0") + F.col("cy")), order
-            )
-            * _bspline_weight(F.col("fx") - (F.col("x0") + F.col("cx")), order),
-        }
-    ).withColumns(
-        {
-            # whole-sample mirror, single-bounce (valid while the mapped
-            # source point stays within one image extent of the border)
-            "sy": F.expr(remap_sql("ry", h, "mirror")).cast("int"),
-            "sx": F.expr(remap_sql("rx", w, "mirror")).cast("int"),
+            f"_s{a}": F.expr(remap_sql(f"_{a}0 + _c{a}", n, mode)).cast("int")
+            for a, n in zip(axes, shape)
         }
     )
-    src = c.select(
-        *keys, F.col("y").alias("sy"), F.col("x").alias("sx"),
-        F.col("v").alias("cv"),
+    src = px.select(
+        *keys, *(F.col(a).alias(f"_s{a}") for a in axes),
+        F.col("value").alias("_v"),
     )
-    return (
-        j.join(src, on=[*keys, "sy", "sx"])
-        .groupBy(*keys, "y", "x")
-        .agg(F.sum(F.col("wgt") * F.col("cv")).alias("v"))
+    on = [*keys, *(f"_s{a}" for a in axes)]
+    if mode == "constant":
+        j = fan.join(src, on=on, how="left")
+        val = F.coalesce(F.col("_v"), F.lit(float(cval)))
+    else:
+        j = fan.join(src, on=on)
+        val = F.col("_v")
+    if order == 0:
+        return j.select(*ident, val.alias("v"))
+    return j.groupBy(*ident).agg(F.sum(F.col("_w") * val).alias("v"))
+
+
+def affine_transform(
+    px: DataFrame, matrix, offset, shape, *, order: int = 1,
+    mode: str = "nearest", cval: float = 0.0, keys=(),
+) -> DataFrame:
+    """``affine_transform`` (upstream ``ndinterp/__init__.py``, any rank):
+    output pixel ``o`` samples the source at ``matrix @ o + offset`` through
+    :func:`map_coordinates`, over the output grid of ``px`` itself. Returns
+    (``keys``, axis columns, ``v``)."""
+    keys = list(keys)
+    axes = axis_names(len(shape))
+    src = [
+        functools.reduce(
+            operator.add,
+            [F.lit(float(m)) * F.col(b) for m, b in zip(row, axes)],
+        ) + F.lit(float(o))
+        for row, o in zip(matrix, offset)
+    ]
+    coords = px.select(
+        *keys, *(F.col(a).alias(f"_o{a}") for a in axes),
+        *(s.alias(a) for s, a in zip(src, axes)),
     )
+    out = map_coordinates(
+        px, coords, shape, order=order, mode=mode, cval=cval, keys=keys
+    )
+    return out.select(*keys, *(F.col(f"_o{a}").alias(a) for a in axes), "v")
 
 
 def rotate(px: DataFrame, angle_deg: float, shape, keys=()) -> DataFrame:
     """Arbitrary-angle rotation about the image center, reshape=False
     (``ndinterp/__init__.py::rotate``): build the inverse-map matrix
     source = R @ (out - c) + c and delegate to the bilinear affine gather."""
-    import math
-
     h, w = shape
     th = math.radians(angle_deg)
     cos_t, sin_t = math.cos(th), math.sin(th)
@@ -334,7 +266,7 @@ def rotate(px: DataFrame, angle_deg: float, shape, keys=()) -> DataFrame:
         cy - cos_t * cy - sin_t * cx,
         cx + sin_t * cy - cos_t * cx,
     )
-    return affine_transform_order1(px, matrix, offset, shape, keys)
+    return affine_transform(px, matrix, offset, shape, order=1, keys=keys)
 
 
 def rotate90(px: DataFrame, shape, keys=()) -> DataFrame:
@@ -363,57 +295,3 @@ def shift_wrap(px: DataFrame, shift, shape, keys=()) -> DataFrame:
         F.pmod(F.col("x") + F.lit(int(sx)), F.lit(w)).cast("int").alias("_ox"),
         F.col("value").alias("v"),
     ).select(*keys, F.col("_oy").alias("y"), F.col("_ox").alias("x"), "v")
-
-
-def affine_transform_order1_3d(
-    px: DataFrame, diag, offset, shape, keys=(),
-) -> DataFrame:
-    """Rank-3 trilinear affine (diagonal matrix + offset) — the n-D surface
-    of the gather-join pattern: 8 corner pixels via a broadcast corner
-    table, weights as the product of three 1-D lerp terms, clamped
-    (nearest) at edges. Same single-shuffle shape as the 2-D form."""
-    keys = list(keys)
-    d, h, w = shape
-    mz, my, mx = diag
-    oz, oy, ox = offset
-    spark = px.sparkSession
-    corners = values_df(
-        spark, "cz, cy, cx",
-        [(a, b, c) for a in (0, 1) for b in (0, 1) for c in (0, 1)],
-    )
-    fz = F.lit(float(mz)) * F.col("z") + F.lit(float(oz))
-    fy = F.lit(float(my)) * F.col("y") + F.lit(float(oy))
-    fx = F.lit(float(mx)) * F.col("x") + F.lit(float(ox))
-    base = px.select(*keys, "z", "y", "x").withColumns(
-        {"fz": fz, "fy": fy, "fx": fx}
-    ).withColumns(
-        {
-            "z0": F.floor(F.col("fz")).cast("int"),
-            "y0": F.floor(F.col("fy")).cast("int"),
-            "x0": F.floor(F.col("fx")).cast("int"),
-            "tz": F.col("fz") - F.floor(F.col("fz")),
-            "ty": F.col("fy") - F.floor(F.col("fy")),
-            "tx": F.col("fx") - F.floor(F.col("fx")),
-        }
-    )
-    j = base.crossJoin(F.broadcast(corners)).withColumns(
-        {
-            "sz": F.least(F.greatest(F.col("z0") + F.col("cz"), F.lit(0)), F.lit(d - 1)),
-            "sy": F.least(F.greatest(F.col("y0") + F.col("cy"), F.lit(0)), F.lit(h - 1)),
-            "sx": F.least(F.greatest(F.col("x0") + F.col("cx"), F.lit(0)), F.lit(w - 1)),
-            "wgt": (
-                F.when(F.col("cz") == 0, 1 - F.col("tz")).otherwise(F.col("tz"))
-                * F.when(F.col("cy") == 0, 1 - F.col("ty")).otherwise(F.col("ty"))
-                * F.when(F.col("cx") == 0, 1 - F.col("tx")).otherwise(F.col("tx"))
-            ),
-        }
-    )
-    src = px.select(
-        *keys, F.col("z").alias("sz"), F.col("y").alias("sy"),
-        F.col("x").alias("sx"), F.col("value").alias("sv"),
-    )
-    return (
-        j.join(src, on=[*keys, "sz", "sy", "sx"])
-        .groupBy(*keys, "z", "y", "x")
-        .agg(F.sum(F.col("wgt") * F.col("sv")).alias("v"))
-    )

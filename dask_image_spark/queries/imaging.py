@@ -1379,8 +1379,9 @@ def affine_order1_3d(spark, sf_dir):
         F.expr(f"CAST((event_id div {_VOL}) % {_VOL} AS INT)").alias("y"),
         F.expr(f"CAST((event_id div {_VOL * _VOL}) % {_VOL} AS INT)").alias("x"),
     ).agg(F.sum("value").alias("value"))
-    out = ndinterp.affine_transform_order1_3d(
-        px3, (0.7, 0.7, 0.7), (2.5, 1.25, 3.75), (_VOL, _VOL, _VOL)
+    out = ndinterp.affine_transform(
+        px3, [[0.7, 0.0, 0.0], [0.0, 0.7, 0.0], [0.0, 0.0, 0.7]],
+        (2.5, 1.25, 3.75), (_VOL, _VOL, _VOL), order=1, mode="nearest",
     )
     return out.select("z", "y", "x", _eps_round("v", 4).alias("v"))
 

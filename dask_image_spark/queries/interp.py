@@ -1,9 +1,10 @@
 """Graded queries for ndinterp / ndfourier / label / UDF surfaces.
 
-Gather-join transforms (affine order 0/1, rotate, shift) are strong-oracle;
-the recursive/global R2 operators (spline prefilter, FFT ops) and
-connected-components are weak-checked here and differentially tested in
-``tests/`` against pure-python references.
+Gather-join transforms (affine orders 0-5, rotate, zoom and coordinate
+sampling, all through ``ndinterp.map_coordinates``) and shift are
+strong-oracle; the recursive/global R2 operators (spline prefilter, FFT
+ops) and connected-components are weak-checked here and differentially
+tested in ``tests/`` against pure-python references.
 """
 
 from __future__ import annotations
@@ -27,7 +28,6 @@ from dask_image_spark.operators import (
     ndmeasure,
     ndmorph,
 )
-from dask_image_spark.functions.localrel import values_df
 from dask_image_spark.queries.base import r as _eps_round, register
 from dask_image_spark.sources.tables import load_table
 
@@ -46,8 +46,8 @@ N = GRID
 )
 def affine_order0(spark, sf_dir):
     px = pixel_grid(spark, sf_dir)
-    out = ndinterp.affine_transform_order0(
-        px, [[0.5, 0.0], [0.0, 0.5]], (3.2, 1.7), SHAPE
+    out = ndinterp.affine_transform(
+        px, [[0.5, 0.0], [0.0, 0.5]], (3.2, 1.7), SHAPE, order=0
     )
     return out.select("y", "x", _eps_round("v", 4).alias("v"))
 
@@ -74,8 +74,8 @@ def affine_order0(spark, sf_dir):
 )
 def affine_order1(spark, sf_dir):
     px = pixel_grid(spark, sf_dir)
-    out = ndinterp.affine_transform_order1(
-        px, [[0.7, 0.0], [0.0, 0.7]], (2.5, 5.25), SHAPE
+    out = ndinterp.affine_transform(
+        px, [[0.7, 0.0], [0.0, 0.7]], (2.5, 5.25), SHAPE, order=1
     )
     return out.select("y", "x", _eps_round("v", 4).alias("v"))
 
@@ -152,8 +152,8 @@ def affine_order0_wrap_q(spark, sf_dir):
     by ``affine_order0``): out-of-range source coordinates wrap modulo the
     grid via the shared ``remap_sql`` text."""
     px = pixel_grid(spark, sf_dir)
-    out = ndinterp.affine_transform_order0(
-        px, _BMODE["matrix"], _BMODE["offset"], SHAPE, mode="wrap"
+    out = ndinterp.affine_transform(
+        px, _BMODE["matrix"], _BMODE["offset"], SHAPE, order=0, mode="wrap"
     )
     return out.select("y", "x", _eps_round("v", 4).alias("v"))
 
@@ -170,8 +170,8 @@ def affine_order0_nearest_q(spark, sf_dir):
     the graded default ``affine_order0``, whose zoom-in stays in range,
     this exercises both clamp branches of the shared ``remap_sql`` text."""
     px = pixel_grid(spark, sf_dir)
-    out = ndinterp.affine_transform_order0(
-        px, _BMODE["matrix"], _BMODE["offset"], SHAPE, mode="nearest"
+    out = ndinterp.affine_transform(
+        px, _BMODE["matrix"], _BMODE["offset"], SHAPE, order=0, mode="nearest"
     )
     return out.select("y", "x", _eps_round("v", 4).alias("v"))
 
@@ -188,8 +188,8 @@ def affine_order1_reflect_q(spark, sf_dir):
     whole-sample reflection; completes the scipy ``mode=`` matrix (all
     five modes now have a graded affine instance)."""
     px = pixel_grid(spark, sf_dir)
-    out = ndinterp.affine_transform_order1(
-        px, _BMODE["matrix"], _BMODE["offset"], SHAPE, mode="reflect"
+    out = ndinterp.affine_transform(
+        px, _BMODE["matrix"], _BMODE["offset"], SHAPE, order=1, mode="reflect"
     )
     return out.select("y", "x", _eps_round("v", 4).alias("v"))
 
@@ -204,8 +204,8 @@ def affine_order1_mirror_q(spark, sf_dir):
     (``affine_transform(mode='mirror')``) — corner coordinates reflect
     without edge repetition before the gather join."""
     px = pixel_grid(spark, sf_dir)
-    out = ndinterp.affine_transform_order1(
-        px, _BMODE["matrix"], _BMODE["offset"], SHAPE, mode="mirror"
+    out = ndinterp.affine_transform(
+        px, _BMODE["matrix"], _BMODE["offset"], SHAPE, order=1, mode="mirror"
     )
     return out.select("y", "x", _eps_round("v", 4).alias("v"))
 
@@ -221,8 +221,8 @@ def affine_order1_constant_q(spark, sf_dir):
     absent corners contribute ``cval`` through ``coalesce``, so edge
     output pixels blend into the fill value exactly as upstream does."""
     px = pixel_grid(spark, sf_dir)
-    out = ndinterp.affine_transform_order1(
-        px, _BMODE["matrix"], _BMODE["offset"], SHAPE, mode="constant"
+    out = ndinterp.affine_transform(
+        px, _BMODE["matrix"], _BMODE["offset"], SHAPE, order=1, mode="constant"
     )
     return out.select("y", "x", _eps_round("v", 4).alias("v"))
 
@@ -239,8 +239,8 @@ def affine_order3_identity(spark, sf_dir):
     cubic gather must reproduce the source exactly (B-spline reconstruction
     identity) — a strong end-to-end oracle for the whole order-3 path."""
     px = pixel_grid(spark, sf_dir)
-    out = ndinterp.affine_transform_order3(
-        px, [[1.0, 0.0], [0.0, 1.0]], (0.0, 0.0), SHAPE
+    out = ndinterp.affine_transform(
+        px, [[1.0, 0.0], [0.0, 1.0]], (0.0, 0.0), SHAPE, order=3, mode="mirror"
     )
     return out.select("y", "x", _eps_round("v", 4).alias("v"))
 
@@ -330,8 +330,8 @@ def affine_order3_q(spark, sf_dir):
     also differentially tested against a dense numpy implementation
     (incl. full shear matrices) in tests/test_affine_order3.py."""
     px = pixel_grid(spark, sf_dir)
-    out = ndinterp.affine_transform_order3(
-        px, [[0.7, 0.0], [0.0, 0.7]], (2.5, 5.25), SHAPE
+    out = ndinterp.affine_transform(
+        px, [[0.7, 0.0], [0.0, 0.7]], (2.5, 5.25), SHAPE, order=3, mode="mirror"
     )
     return out.select("y", "x", _eps_round("v", 4).alias("v"))
 
@@ -677,8 +677,9 @@ def _affine_identity_query(order: int):
 
     def q(spark, sf_dir):
         px = pixel_grid(spark, sf_dir)
-        out = ndinterp.affine_transform_spline(
-            px, [[1.0, 0.0], [0.0, 1.0]], (0.0, 0.0), SHAPE, order=order
+        out = ndinterp.affine_transform(
+            px, [[1.0, 0.0], [0.0, 1.0]], (0.0, 0.0), SHAPE, order=order,
+            mode="mirror",
         )
         return out.select("y", "x", _eps_round("v", 4).alias("v"))
 
@@ -895,41 +896,24 @@ def interp_map_coordinates(spark, sf_dir):
     any (y, x) float pairs, not a grid image of them — landmark
     sampling, warp fields, line profiles). 500 deterministic fractional
     coordinates (all interior, so no boundary branch muddies the
-    contract) gather their 4 bilinear corners against the pixel grid:
-    the coordinate table fans out x4 map-side, ONE equi-join on the
-    corner key, one k-grouped aggregate. At 100 TB the coordinate side
-    is usually the small one — broadcast it and the plan is
-    shuffle-free on the image; here both sides are tiny and AQE picks
+    contract) gather their 4 bilinear corners against the pixel grid
+    through ``ndinterp.map_coordinates`` (``mode='nearest'`` never moves
+    an in-range corner): the coordinate table fans out x4 map-side, ONE
+    equi-join on the corner key, one k-grouped aggregate. At 100 TB the
+    coordinate side is usually the small one — broadcast it and the plan
+    is shuffle-free on the image; here both sides are tiny and AQE picks
     the broadcast. The oracle replays the same floor/frac arithmetic
     per corner."""
     ev = load_table(spark, sf_dir, "events").filter(F.col("event_id") < 500)
     coords = ev.select(
         F.col("event_id").alias("k"),
-        (((F.col("event_id") * 31) % 630) / 10.0).alias("yc"),
-        (((F.col("event_id") * 17 + 5) % 630) / 10.0).alias("xc"),
+        (((F.col("event_id") * 31) % 630) / 10.0).alias("y"),
+        (((F.col("event_id") * 17 + 5) % 630) / 10.0).alias("x"),
     )
-    corners = values_df(spark, "cy, cx", [(0, 0), (0, 1), (1, 0), (1, 1)])
-    fan = coords.crossJoin(F.broadcast(corners)).select(
-        "k",
-        (F.floor("yc").cast("int") + F.col("cy")).alias("sy"),
-        (F.floor("xc").cast("int") + F.col("cx")).alias("sx"),
-        (
-            F.when(F.col("cy") == 0, 1 - (F.col("yc") - F.floor("yc")))
-            .otherwise(F.col("yc") - F.floor("yc"))
-            * F.when(F.col("cx") == 0, 1 - (F.col("xc") - F.floor("xc")))
-            .otherwise(F.col("xc") - F.floor("xc"))
-        ).alias("wgt"),
+    out = ndinterp.map_coordinates(
+        pixel_grid(spark, sf_dir), coords, SHAPE, order=1, mode="nearest"
     )
-    px = pixel_grid(spark, sf_dir)
-    return (
-        fan.join(
-            px,
-            (F.col("sy") == F.col("y")) & (F.col("sx") == F.col("x")),
-        )
-        .groupBy("k")
-        .agg(_eps_round(F.sum(F.col("wgt") * F.col("value")), 4).alias("v"))
-        .orderBy("k")
-    )
+    return out.select("k", _eps_round("v", 4).alias("v")).orderBy("k")
 
 
 _FILL_HOLES_ORACLE = """
@@ -1341,50 +1325,25 @@ def interp_zoom_order1(spark, sf_dir):
     instead of iterating input pixels like
     [[affine_order1]]. Corner reads past the last row/column only ever
     carry weight 0 (src hits the endpoint exactly there); they're
-    clamped so both engines gather 4 real pixels per output cell.
+    clamped (``mode='nearest'``, the oracle's ``LEAST(floor + 1, 63)``)
+    so both engines gather 4 real pixels per output cell.
 
     Plan: destination lattice (broadcast-scale here; at a real image it
-    is generated per tile), x4 broadcast corner fan-out, ONE shuffle
-    join against the source pixels on (sy, sx), ONE partial-agg
-    groupBy of the 4 weighted corners per output pixel — the identical
+    is generated per tile), then ``ndinterp.map_coordinates``: x4
+    broadcast corner fan-out, ONE shuffle join against the source pixels
+    on (sy, sx), ONE partial-agg groupBy of the 4 weighted corners per
+    output pixel — the identical
     two-exchange shape as the affine gather, independent of the zoom
     factor. Upsampling 100 TB means 4x the rows out of the join; the
     gather keys stay uniformly distributed, no skew."""
-    px = pixel_grid(spark, sf_dir)
     yo = spark.range(128).select(F.col("id").cast("int").alias("yo"))
     xo = spark.range(128).select(F.col("id").cast("int").alias("xo"))
-    o = yo.crossJoin(xo).select(
+    coords = yo.crossJoin(xo).select(
         "yo", "xo",
-        (F.col("yo") * 63.0 / 127.0).alias("fy"),
-        (F.col("xo") * 63.0 / 127.0).alias("fx"),
+        (F.col("yo") * 63.0 / 127.0).alias("y"),
+        (F.col("xo") * 63.0 / 127.0).alias("x"),
     )
-    corners = values_df(
-        spark, "cy, cx", [(0, 0), (0, 1), (1, 0), (1, 1)]
+    out = ndinterp.map_coordinates(
+        pixel_grid(spark, sf_dir), coords, SHAPE, order=1, mode="nearest"
     )
-    j = o.crossJoin(F.broadcast(corners)).select(
-        "yo", "xo",
-        F.when(
-            F.col("cy") == 0, F.floor("fy").cast("int")
-        ).otherwise(
-            F.least(F.floor("fy").cast("int") + 1, F.lit(63))
-        ).alias("sy"),
-        F.when(
-            F.col("cx") == 0, F.floor("fx").cast("int")
-        ).otherwise(
-            F.least(F.floor("fx").cast("int") + 1, F.lit(63))
-        ).alias("sx"),
-        (
-            F.when(F.col("cy") == 0, 1 - (F.col("fy") - F.floor("fy")))
-            .otherwise(F.col("fy") - F.floor("fy"))
-            * F.when(F.col("cx") == 0, 1 - (F.col("fx") - F.floor("fx")))
-            .otherwise(F.col("fx") - F.floor("fx"))
-        ).alias("w"),
-    )
-    src = px.select(
-        F.col("y").alias("sy"), F.col("x").alias("sx"), "value"
-    )
-    return (
-        j.join(src, ["sy", "sx"])
-        .groupBy("yo", "xo")
-        .agg(_eps_round(F.sum(F.col("w") * F.col("value")), 4).alias("v"))
-    )
+    return out.select("yo", "xo", _eps_round("v", 4).alias("v"))

@@ -38,7 +38,7 @@ def pytest_collection_modifyitems(config, items):
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="dask-image-spark-tests", master="local[8]")
+    s = get_spark(app_name="dask-image-spark-tests")
     yield s
 
 

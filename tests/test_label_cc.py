@@ -236,6 +236,45 @@ def test_label_fallback_on_real_overthreshold_noise_mask(spark, monkeypatch):
     assert central == fallback == _bfs_components(mask)
 
 
+def test_label_probe_fits_merges_on_driver(spark, monkeypatch):
+    """The middle strategy: the geometric half-edge bound exceeds the
+    budget, so the paired edges go through the distinct().limit(n+1)
+    probe, and they fit. With the budget set to exactly the mask's
+    distinct fragment-pair count, the probe must keep the merge on the
+    driver (neither the raw half-edge pairing nor the distributed merge
+    runs) and still give the BFS labels."""
+    h = w = 24
+    block = 4
+    y, x = np.mgrid[0:h, 0:w]
+    mask = ((y * 2654435761 + x * 40503) % 97) < 43
+    fwd = label_cc.forward_offsets()
+    a_parts, l_parts = [], []
+    for by in range(0, h, block):
+        for bx in range(0, w, block):
+            ys, xs = np.nonzero(mask[by:by + block, bx:bx + block])
+            if ys.size:
+                a, lbl = label_cc._block_rows(ys + by, xs + bx, w, block, fwd)
+                a_parts.append(a)
+                l_parts.append(lbl)
+    a, lbl = np.concatenate(a_parts), np.concatenate(l_parts)
+    lo, hi = label_cc.pair_halfedges(-a[a < 0] - 1, lbl[a < 0])
+    n_pairs = len(set(zip(lo.tolist(), hi.tolist())))
+    bound = label_cc.max_halfedge_rows((h, w), block, fwd)
+    assert 0 < n_pairs < bound
+
+    def not_called(*args, **kwargs):
+        raise AssertionError("the probe-fits branch left the driver merge")
+
+    monkeypatch.setattr(label_cc, "MAX_DRIVER_EDGES", n_pairs)
+    monkeypatch.setattr(label_cc, "pair_halfedges", not_called)
+    monkeypatch.setattr(graph, "min_label_components", not_called)
+    got = {
+        (r["y"], r["x"]): r["label"]
+        for r in label(_mask_df(spark, mask), (h, w), block=block).collect()
+    }
+    assert got == _bfs_components(mask)
+
+
 def test_prelabel_exchange_not_aqe_coalesced(spark):
     """The pre-label stage is Python-CPU-bound, so its exchange must keep
     one task per block (up to the cap) instead of letting AQE's

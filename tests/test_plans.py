@@ -1031,7 +1031,8 @@ BCAST_GENERATE_ALLOWLIST = {
     "lang_id",
 }
 # NOTE: broadcast decisions vary slightly with session parallelism (the
-# suite runs local[8], the standalone audits local[32]); the allowlist is
+# suite runs session.default_master(), i.e. local[$SPARK_GRAFT_CPUS], the
+# standalone audits local[32]); the allowlist is
 # the UNION of adjudicated-bounded flags across both, so a name here may
 # not flag in every environment — that is expected, only NEW names fail.
 # Staleness guard (ADVICE r12): the walk below LOGS which allowlisted
@@ -1123,8 +1124,8 @@ def test_no_broadcast_wraps_generate_registrywide(spark, sf_dir, chunk):
     print(
         f"\n[bcast-generate allowlist chunk {chunk}/8] "
         f"{len(allow_flagged)}/{len(chunk_allow)} entries flag in this "
-        f"environment; not flagging here (union across local[8]/"
-        f"local[32], expected nonempty): {stale}"
+        f"environment; not flagging here (union across suite/"
+        f"local[32] sessions, expected nonempty): {stale}"
     )
     assert not cartesian, f"CartesianProduct planned in: {cartesian}"
     assert not offenders, (
